@@ -4,7 +4,7 @@
       → pass 1: sampled column stats (stats.collect_stats)
       → driver codec decision (selector.choose_codecs)
       → deterministic chunk assignment pmod(xxhash64(key), n_chunks)
-      → pass 2: groupBy(chunk).applyInPandas encode (codecs.*)
+      → pass 2: groupBy(chunk).applyInArrow encode (codecs.*)
       → chunk store  (parquet, partitioned by chunk_id, dynamic overwrite)
       → manifest     (parquet append: per-(chunk,column) codec/bytes/
                       checksum/wall — lineage + metrics checkpoint)
@@ -114,12 +114,14 @@ def completed_chunks(spark: SparkSession, out_dir: str,
     # and letting DataFrameReader.parquet throw PATH_NOT_FOUND makes log4j
     # print a full JVM stack trace to stderr on EVERY fresh encode — pure
     # noise in batch logs. The except stays for the crash-resume corner
-    # where a killed run left a directory the reader can't infer from.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
+    # where a killed run left a directory the reader can't infer from,
+    # and is the only check on sessions without a JVM handle (Spark
+    # Connect).
+    jvm, jsc = getattr(spark, "_jvm", None), getattr(spark, "_jsc", None)
+    if jvm is not None and jsc is not None:
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        if not hpath.getFileSystem(jsc.hadoopConfiguration()).exists(hpath):
+            return None
     try:
         m = spark.read.parquet(path)
     except Exception:
@@ -195,6 +197,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             os.remove(_meta_file(out_dir))
 
     stats_wall = 0.0
+    plan_source = "table_meta" if existing is not None else "stats"
     if existing is not None:
         codecs = existing["codecs"]
         plan = _plan_from_json(existing["codec_plan"])
@@ -269,6 +272,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
                     "codecs": codecs,
                     "wall_s": time.perf_counter() - t0,
                     "stats_s": round(stats_wall, 3),
+                    "plan_source": plan_source,
                     "encode_s": 0.0, "manifest_s": 0.0}
         todo_limited = spark.createDataFrame(todo_rows, "chunk_id int")
         chunked = chunked.join(
@@ -370,6 +374,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         "codecs": codecs,
         "wall_s": time.perf_counter() - t0,
         "stats_s": round(stats_wall, 3),
+        "plan_source": plan_source,
         "encode_s": round(encode_wall, 3),
         "manifest_s": round(time.perf_counter() - t_manifest, 3),
     }

@@ -11,9 +11,13 @@ ingest path for continuously-arriving web pages:
       into one shared store would make each batch's dynamic partition
       overwrite replace the previous batches' chunk directories (only the
       last batch would survive). Per-batch stores make replayed batches
-      idempotent (same batch_id → same directory, fresh overwrite) while
-      `plans.pipeline.read_encoded` unions the sub-stores transparently;
-      checkpointLocation makes the stream itself resumable.
+      idempotent (same batch_id → same directory, wiped and re-encoded)
+      while `plans.pipeline.read_encoded` unions the sub-stores
+      transparently; checkpointLocation makes the stream itself resumable.
+      The first batch runs pass 1 (sampled stats → codec plan); every
+      later batch pins that plan and its n_chunks by seeding its own
+      table_meta.json from the oldest sub-store, so run_encode's resume
+      path skips pass 1 for it.
 
 plus a classic watermark + tumbling-window aggregation over the events
 table shape, demonstrating late-data handling with built-in operators.
@@ -33,6 +37,11 @@ WEBPAGE_SCHEMA = T.StructType([
     T.StructField("lang", T.StringType()),
 ])
 
+# table_meta.json fields a later micro-batch copies from the first one;
+# writer facts such as single_row_group stay per sub-store
+_PINNED_META = ("schema", "key", "n_chunks", "codecs", "codec_plan",
+                "sort_order")
+
 
 def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
                   checkpoint_dir: str, fmt: str = "parquet",
@@ -40,12 +49,20 @@ def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
     """Stream web pages from a directory into an encoded chunk store.
 
     Each micro-batch runs the batch pipeline into its own sub-store
-    `out_dir/batches/<batch_id>`; a replayed batch re-encodes the same
-    directory deterministically (resume=False wipes any half-written
-    attempt first). Returns the StreamingQuery."""
+    `out_dir/batches/<batch_id>`. The first batch runs pass 1 and chooses
+    the codec plan; every later batch reuses it: the plan fields of the
+    oldest other sub-store's table_meta.json (schema, key, n_chunks,
+    codecs, codec_plan, sort_order) are written into the batch's own
+    directory, and run_encode(resume=True) takes them instead of
+    re-sampling. `n_chunks` therefore applies to the first batch only. A
+    replayed batch wipes its own directory first, so a half-written
+    attempt (stale meta, chunks or manifest) never survives. Returns the
+    StreamingQuery."""
+    import json
     import os
+    import shutil
 
-    from ..plans.pipeline import run_encode
+    from ..plans.pipeline import _batch_dirs, _meta_file, run_encode
 
     reader = spark.readStream.format(fmt).schema(WEBPAGE_SCHEMA)
     stream = reader.load(src_dir)
@@ -54,8 +71,17 @@ def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
         if batch_df.isEmpty():
             return
         batch_dir = os.path.join(out_dir, "batches", f"{batch_id:010d}")
+        shutil.rmtree(batch_dir, ignore_errors=True)
+        pinned = _batch_dirs(out_dir)
+        os.makedirs(batch_dir)
+        if pinned:
+            with open(_meta_file(pinned[0])) as fh:
+                meta = json.load(fh)
+            with open(_meta_file(batch_dir), "w") as fh:
+                json.dump({k: meta[k] for k in _PINNED_META if k in meta},
+                          fh)
         run_encode(batch_df.sparkSession, batch_df, batch_dir,
-                   n_chunks=n_chunks, resume=False, sample_fraction=0.5)
+                   n_chunks=n_chunks, resume=True, sample_fraction=0.5)
 
     writer = (stream.writeStream.foreachBatch(sink)
               .option("checkpointLocation", checkpoint_dir))

@@ -70,6 +70,29 @@ def test_pipeline_run_and_verify(spark, pages, tmp_path):
     assert m2["chunks_encoded"] == 0 and m2["chunks_skipped"] == 6
 
 
+class _NoJvmSession:
+    """A session without `_jvm`/`_jsc`, like a Spark Connect client;
+    everything else forwards to the real session."""
+
+    def __init__(self, spark):
+        self._spark = spark
+
+    def __getattr__(self, name):
+        if name in ("_jvm", "_jsc"):
+            raise AttributeError(name)
+        return getattr(self._spark, name)
+
+
+def test_completed_chunks_without_jvm(spark, pages, tmp_path):
+    out = str(tmp_path / "enc")
+    proxy = _NoJvmSession(spark)
+    n_cols = len(pages.columns)
+    assert pipeline.completed_chunks(proxy, out, n_cols) is None
+    pipeline.run_encode(spark, pages, out, n_chunks=4, max_chunks_this_run=2)
+    done = pipeline.completed_chunks(proxy, out, n_cols)
+    assert sorted(r.chunk_id for r in done.collect()) == [0, 1]
+
+
 def test_pipeline_resume_identical(spark, pages, tmp_path):
     """Kill-and-resume: partial run + resumed run == single-shot run."""
     out_a = str(tmp_path / "partial")

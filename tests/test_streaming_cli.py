@@ -1,6 +1,9 @@
 """Streaming ingest + CLI smoke tests."""
 
+import glob
 import json
+import os
+import shutil
 import subprocess
 import sys
 
@@ -150,10 +153,20 @@ print("CLI_OK")
     assert "CLI_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
 
 
+def _meta_and_metrics(store):
+    with open(os.path.join(store, "table_meta.json")) as fh:
+        meta = json.load(fh)
+    (metrics_file,) = glob.glob(os.path.join(store, "metrics_*.json"))
+    with open(metrics_file) as fh:
+        return meta, json.load(fh)
+
+
 def test_streaming_encode_multi_batch(spark, tmp_path):
     """Two micro-batches must BOTH survive: chunk ids repeat across
     batches (url-hash pmod), so a shared store would let batch 2's
-    dynamic overwrite wipe batch 1's chunk dirs."""
+    dynamic overwrite wipe batch 1's chunk dirs. Batch 2 pins batch 1's
+    codec plan (no pass 1), and a replay over its stale leftovers must
+    not trust them."""
     from json_to_parquet_spark.sources.webpages import synth_webpages
     src = str(tmp_path / "in")
     all_pages = synth_webpages(spark, 2000, seed=11).cache()
@@ -166,8 +179,26 @@ def test_streaming_encode_multi_batch(spark, tmp_path):
     q = encode_stream(spark, src, out, ckpt, n_chunks=4)
     q.awaitTermination(timeout=300)
     second.write.mode("append").parquet(src)
-    q = encode_stream(spark, src, out, ckpt, n_chunks=4)
+    # leftovers of a crashed attempt at batch 1: a meta with another
+    # n_chunks (resume would trust it) and a chunk no plan produces,
+    # holding batch 0's rows (ghost duplicates if it survived)
+    b0 = os.path.join(out, "batches", f"{0:010d}")
+    b1 = os.path.join(out, "batches", f"{1:010d}")
+    meta0, run0 = _meta_and_metrics(b0)
+    shutil.copytree(os.path.join(b0, "chunks", "chunk_id=0"),
+                    os.path.join(b1, "chunks", "chunk_id=99"))
+    with open(os.path.join(b1, "table_meta.json"), "w") as fh:
+        json.dump(dict(meta0, n_chunks=7), fh)
+    q = encode_stream(spark, src, out, ckpt, n_chunks=3)
     q.awaitTermination(timeout=300)
+
+    meta1, run1 = _meta_and_metrics(b1)
+    for k in ("codecs", "codec_plan", "sort_order", "n_chunks"):
+        assert meta1[k] == meta0[k], k
+    assert meta1["n_chunks"] == 4
+    assert run0["stats_s"] > 0 and run0["plan_source"] == "stats"
+    assert run1["stats_s"] == 0 and run1["plan_source"] == "table_meta"
+    assert not os.path.exists(os.path.join(b1, "chunks", "chunk_id=99"))
 
     decoded = pipeline.read_encoded(spark, out)
     assert decoded.count() == 2000
