@@ -52,6 +52,7 @@ from .chunking import CHUNK_COL, perfect_shuffle_salts, with_chunk_id
 
 # shuffle/group relabeling column (see encode_chunks straggler notes)
 SALT_COL = "__chunk_salt"
+STORE_COL = "__store"  # sub-store tag (see decode_chunks)
 
 CHUNK_SCHEMA = T.StructType([
     T.StructField("chunk_id", T.IntegerType(), False),
@@ -305,35 +306,19 @@ def encode_chunks(df: DataFrame, key: str, codecs: dict,
     return chunked.groupBy(CHUNK_COL).applyInArrow(fn, schema=out_schema)
 
 
-def _decode_group_fn(schema: T.StructType, arrow_schema: pa.Schema):
-    columns = [f.name for f in schema.fields]
-
-    def fn(table: pa.Table) -> pa.Table:
-        names = table.column("column").to_pylist()  # one entry per column
-        metas = table.column("meta").to_pylist()
-        payloads = table.column("payload").to_pylist()
-        arrays = {}
-        for name, meta_s, payload in zip(names, metas, payloads):
-            arrays[name] = decode_column(bytes(payload),
-                                         meta_from_json(meta_s))
-        return pa.table({c: arrays[c].cast(arrow_schema.field(c).type)
-                         for c in columns}, schema=arrow_schema)
-    return fn
-
-
 def _decode_map_fn(schema: T.StructType, arrow_schema: pa.Schema):
-    """Shuffle-free decode: group chunk rows by chunk_id WITHIN each scan
-    task. Valid because every producer emits whole chunks per partition —
-    the chunk store is one file per chunk (parquet files split only at
-    row-group boundaries, and a chunk's handful of payload rows is one
-    row group), and encode_chunks's output is grouped by chunk id. A
-    chunk decodes (and its buffers release) the moment its last column
-    row is seen, so peak memory is ~one chunk regardless of task size."""
+    """Decode that groups chunk rows by chunk WITHIN each task (or each
+    groupBy group). Valid because every producer emits whole chunks per
+    partition: the chunk store is one file per chunk (a chunk's handful of
+    payload rows is one row group, and parquet splits only at row groups),
+    and encode_chunks's output is grouped by chunk id. A chunk decodes
+    (and its buffers release) the moment its last column row is seen, so
+    peak memory is ~one chunk regardless of task size."""
     columns = [f.name for f in schema.fields]
     expected = frozenset(columns)
 
     def fn(batches):
-        pending: dict[int, dict[str, tuple[str, bytes]]] = {}
+        pending: dict[int | tuple, dict[str, tuple[str, bytes]]] = {}
 
         def emit(got: dict[str, tuple[str, bytes]]):
             arrays = {}
@@ -345,9 +330,11 @@ def _decode_map_fn(schema: T.StructType, arrow_schema: pa.Schema):
             yield from table.to_batches()
 
         for rb in batches:
-            idx = {n: rb.schema.get_field_index(n)
-                   for n in ("chunk_id", "column", "meta", "payload")}
+            idx = {n: rb.schema.get_field_index(n) for n in
+                   ("chunk_id", "column", "meta", "payload", STORE_COL)}
             cids = rb.column(idx["chunk_id"]).to_pylist()
+            if idx[STORE_COL] >= 0:  # chunk = (sub-store, chunk_id)
+                cids = list(zip(rb.column(idx[STORE_COL]).to_pylist(), cids))
             names = rb.column(idx["column"]).to_pylist()
             metas = rb.column(idx["meta"]).to_pylist()
             payloads = rb.column(idx["payload"])
@@ -361,8 +348,8 @@ def _decode_map_fn(schema: T.StructType, arrow_schema: pa.Schema):
         if pending:
             raise RuntimeError(
                 f"chunks {sorted(pending)} are missing column rows within "
-                f"this task — their rows straddle scan partitions (multi-"
-                f"row-group chunk file?). Decode with shuffle=True.")
+                f"this task — straddled scan partitions (multi-row-group "
+                f"file? decode with shuffle=True) or absent from the store.")
     return fn
 
 
@@ -373,28 +360,31 @@ def decode_chunks(chunks: DataFrame, schema: T.StructType,
 
     `columns` selects a subset to decode — the untouched columns' payloads
     are never read (the filter on `column` pushes down to the chunk-store
-    parquet scan), the columnar payoff of the format.
+    parquet scan), the columnar payoff of the format. A chunk is keyed by
+    chunk_id, or by (STORE_COL, chunk_id) when `chunks` has that column.
 
     Default is the SHUFFLE-FREE path: `mapInArrow` over the scan, grouping
-    rows by chunk id within each task. Both producers of chunk rows keep
+    rows by chunk within each task. Both producers of chunk rows keep
     whole chunks inside one partition (the store is one file per chunk;
     encode output is grouped by chunk id), so at the 100 TB design point
-    this reads the table back with ZERO payload Exchange — the groupBy
-    variant (`shuffle=True`) re-shuffled every encoded byte just to
-    co-locate rows that already were. The map path detects the (not
-    observed in practice) straddling case and fails with instructions
-    rather than decoding wrongly."""
+    this reads the table back with ZERO payload Exchange. `shuffle=True`
+    groups by chunk instead (one chunk per Python call), re-shuffling
+    every encoded byte, for stores whose chunks straddle scan partitions;
+    the map path detects that case and fails with instructions rather
+    than decoding wrongly."""
     if columns is not None:
         schema = T.StructType([f for f in schema.fields
                                if f.name in set(columns)])
         chunks = chunks.filter(F.col("column").isin(list(columns)))
     tz = chunks.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
     aschema = arrow_schema_for(schema, tz=tz)
+    key = [c for c in (STORE_COL, "chunk_id") if c in chunks.columns]
+    sel = chunks.select(*key, "column", "meta", "payload")
+    decode = _decode_map_fn(schema, aschema)
     if shuffle:
-        return chunks.groupBy("chunk_id").applyInArrow(
-            _decode_group_fn(schema, aschema), schema=schema)
-    sel = chunks.select("chunk_id", "column", "meta", "payload")
-    return sel.mapInArrow(_decode_map_fn(schema, aschema), schema=schema)
+        return sel.groupBy(*key).applyInArrow(lambda t: pa.Table.from_batches(
+            list(decode(t.to_batches())), schema=aschema), schema=schema)
+    return sel.mapInArrow(decode, schema=schema)
 
 
 def verify_roundtrip(src: DataFrame, decoded: DataFrame, key: str,

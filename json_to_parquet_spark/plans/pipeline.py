@@ -42,7 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.chunking import CHUNK_COL, with_chunk_id
-from ..operators.encode import decode_chunks, encode_chunks, verify_roundtrip
+from ..operators.encode import (STORE_COL, decode_chunks, encode_chunks,
+                                verify_roundtrip)
 from ..operators.selector import (build_codec_plan, choose_codecs,
                                   choose_sort_order)
 from ..operators.stats import collect_stats
@@ -98,6 +99,11 @@ def _chunks_path(out_dir: str) -> str:
 
 def _meta_file(out_dir: str) -> str:
     return os.path.join(out_dir, "table_meta.json")
+
+
+def _read_meta(out_dir: str) -> dict:
+    with open(_meta_file(out_dir)) as fh:
+        return json.load(fh)
 
 
 def completed_chunks(spark: SparkSession, out_dir: str,
@@ -185,8 +191,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
     existing = None
     if os.path.exists(_meta_file(out_dir)):
         if resume:
-            with open(_meta_file(out_dir)) as fh:
-                existing = json.load(fh)
+            existing = _read_meta(out_dir)
         else:
             # fresh run over a used out_dir: stale chunk directories from
             # an older (possibly different-n_chunks) layout would survive
@@ -351,8 +356,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
     # flag is only true while every run over this store was direct.
     # Mutating chunk files in place without updating the meta is out of
     # contract (manifest checksums already catch it).
-    with open(_meta_file(out_dir)) as fh:
-        meta_j = json.load(fh)
+    meta_j = _read_meta(out_dir)
     meta_j["single_row_group"] = bool(direct_store) and \
         meta_j.get("single_row_group", True)
     with open(_meta_file(out_dir), "w") as fh:
@@ -440,8 +444,8 @@ def read_encoded(spark: SparkSession, out_dir: str,
                  where: tuple | None = None,
                  shuffle: bool | None = None) -> DataFrame:
     """Decode the chunk store back to a DataFrame. A streaming store
-    (per-batch sub-stores under out_dir/batches/) is unioned
-    transparently.
+    (per-batch sub-stores under out_dir/batches/, one schema) is read like
+    a single store: one scan, chunks keyed by (sub-store, chunk_id).
 
     columns — decode only these columns (others' payloads never read).
     where — (col, lo, hi) range predicate: chunks whose zone map
@@ -453,29 +457,36 @@ def read_encoded(spark: SparkSession, out_dir: str,
     (crash window between store write and manifest append) are KEPT.
     shuffle — None (default) auto-detects whether any chunk file could
     straddle scan partitions (splittable multi-row-group file) and falls
-    back to the groupBy decode for the whole read instead of failing
+    back to the shuffle decode for the whole read instead of failing
     mid-job; False skips the detection walk (caller asserts a
     one-row-group-per-file store — the engine's own writers guarantee
     it); True forces the shuffle path."""
-    batches = _batch_dirs(out_dir)
-    if batches:
-        out = read_encoded(spark, batches[0], columns, where, shuffle)
-        for b in batches[1:]:
-            out = out.unionByName(
-                read_encoded(spark, b, columns, where, shuffle))
-        return out
-    with open(_meta_file(out_dir)) as fh:
-        meta = json.load(fh)
-    schema = T.StructType.fromJson(json.loads(meta["schema"]))
+    stores = _batch_dirs(out_dir) or [out_dir]
+    metas = [_read_meta(d) for d in stores]
+    for d, meta in zip(stores, metas):
+        if meta["schema"] != metas[0]["schema"]:
+            raise ValueError(f"sub-store {d} has a different schema from "
+                             f"{stores[0]}; read them as separate stores")
+    schema = T.StructType.fromJson(json.loads(metas[0]["schema"]))
     if shuffle is None:
         # stores written entirely by the direct (pyarrow) writer record
         # the one-row-group-per-file invariant at encode time — trust it
         # and skip the per-file footer probe (serial stat pass over ~3M
         # files at 100 TB); otherwise detect
-        shuffle = (False if meta.get("single_row_group")
-                   else _store_needs_shuffle_decode(spark,
-                                                    _chunks_path(out_dir)))
-    chunks = spark.read.parquet(_chunks_path(out_dir))
+        shuffle = any(not m.get("single_row_group") and
+                      _store_needs_shuffle_decode(spark, _chunks_path(d))
+                      for d, m in zip(stores, metas))
+    # partition discovery rejects several partitioned roots, so chunk_id
+    # and the sub-store tag come from the path; the schema skips inference
+    fp = F.col("_metadata.file_path")
+    cid = F.regexp_extract(fp, r"/chunk_id=(\d+)/[^/]*$", 1)
+    chunks = (spark.read.schema("column string, meta string, payload binary")
+              .option("recursiveFileLookup", "true")
+              .parquet(*[_chunks_path(d) for d in stores])
+              .withColumn(STORE_COL, F.regexp_extract(fp, "(.*)/chunks/", 1))
+              .withColumn("chunk_id", F.when(cid != "", cid.cast("int"))
+                          .otherwise(F.raise_error(F.concat(F.lit(
+                              "chunk file outside chunk_id=N/: "), fp)))))
     residual = None
     if where is not None:
         col, lo, hi = where
@@ -487,22 +498,25 @@ def read_encoded(spark: SparkSession, out_dir: str,
             bound_t = "double"
         else:
             bound_t = None  # stringified bounds compare lexically
-        m = spark.read.parquet(_manifest_path(out_dir)) \
-            .filter(F.col("column") == col)
+        m = (spark.read.schema("chunk_id int, column string, min_val string,"
+                               " max_val string")
+             .option("recursiveFileLookup", "true")
+             .parquet(*[_manifest_path(d) for d in stores])
+             .filter(F.col("column") == col)
+             .withColumn(STORE_COL, F.regexp_extract(fp, "(.*)/manifest/", 1)))
         # try_cast: a malformed bound under ANSI mode must degrade to
         # NULL (→ chunk kept), never fail the whole read
-        mn = F.col("min_val").try_cast(bound_t) if bound_t \
-            else F.col("min_val")
-        mx = F.col("max_val").try_cast(bound_t) if bound_t \
-            else F.col("max_val")
+        mn, mx = (F.col(c).try_cast(bound_t) if bound_t else F.col(c)
+                  for c in ("min_val", "max_val"))
         # provably-excluded predicate; NULL bounds → false → chunk kept
         excl = F.lit(False)
         if lo is not None:
             excl = excl | F.coalesce(mx < F.lit(lo), F.lit(False))
         if hi is not None:
             excl = excl | F.coalesce(mn > F.lit(hi), F.lit(False))
-        pruned = m.filter(excl).select("chunk_id").distinct()
-        chunks = chunks.join(F.broadcast(pruned), "chunk_id", "left_anti")
+        pruned = m.filter(excl).select(STORE_COL, "chunk_id").distinct()
+        chunks = chunks.join(F.broadcast(pruned), [STORE_COL, "chunk_id"],
+                             "left_anti")
         residual = F.lit(True)
         if lo is not None:
             residual = residual & (F.col(col) >= F.lit(lo))
@@ -538,8 +552,7 @@ def tighten_nullability(spark: SparkSession, out_dir: str) -> T.StructType:
     JSON inference marks everything nullable — this pass recovers the
     reference's `required` emission for never-null fields."""
     req = required_columns(spark, out_dir)
-    with open(_meta_file(out_dir)) as fh:
-        meta = json.load(fh)
+    meta = _read_meta(out_dir)
     schema = T.StructType.fromJson(json.loads(meta["schema"]))
     tightened = T.StructType([
         T.StructField(f.name, f.dataType,
@@ -558,10 +571,7 @@ def verify_encoded(spark: SparkSession, src: DataFrame, out_dir: str,
     """Round-trip gate: decode chunk store, compare to src bit-identically.
     mode="checksum" verifies via per-column aggregate checksums with no
     join/table shuffle (see operators.encode.verify_roundtrip)."""
-    batches = _batch_dirs(out_dir)
-    meta_dir = batches[0] if batches else out_dir
-    with open(_meta_file(meta_dir)) as fh:
-        meta = json.load(fh)
+    meta = _read_meta((_batch_dirs(out_dir) or [out_dir])[0])
     decoded = read_encoded(spark, out_dir)
     row = verify_roundtrip(src, decoded, meta["key"],
                            mode=mode).collect()[0].asDict()

@@ -12,8 +12,8 @@ ingest path for continuously-arriving web pages:
       overwrite replace the previous batches' chunk directories (only the
       last batch would survive). Per-batch stores make replayed batches
       idempotent (same batch_id → same directory, wiped and re-encoded)
-      while `plans.pipeline.read_encoded` unions the sub-stores
-      transparently; checkpointLocation makes the stream itself resumable.
+      while `plans.pipeline.read_encoded` reads all sub-stores in one
+      scan; checkpointLocation makes the stream itself resumable.
       The first batch runs pass 1 (sampled stats → codec plan); every
       later batch pins that plan and its n_chunks by seeding its own
       table_meta.json from the oldest sub-store, so run_encode's resume

@@ -67,36 +67,47 @@ def test_decode_plan_shuffle_free(spark, tmp_path):
     """read_encoded must decode the chunk store with ZERO Exchange: the
     store is laid out one file per chunk, so the mapInArrow decode groups
     rows in-task — at 100 TB the old groupBy path re-shuffled every
-    encoded payload byte just to read the table back."""
+    encoded payload byte just to read the table back. A two-sub-store
+    streaming store reads the same way: one chunk-store scan, no Union."""
     from json_to_parquet_spark.plans import pipeline
     from json_to_parquet_spark.sources.webpages import synth_webpages
     pages = synth_webpages(spark, 800, partitions=4)
-    out = str(tmp_path / "store")
-    pipeline.run_encode(spark, pages, out, n_chunks=3)
-    decoded = pipeline.read_encoded(spark, out)
-    plan = plan_of(decoded, mode="simple")
-    assert "Exchange" not in plan, plan
-    assert decoded.count() == 800
-    # zone-map pruned read: exchanges may only touch the tiny manifest id
-    # set (the distinct beneath the BroadcastExchange) — never payload
-    # rows, so every Exchange line must sit BELOW the BroadcastExchange
-    # in the plan tree (the payload scan feeds MapInArrow directly)
-    pruned = pipeline.read_encoded(spark, out, columns=["lang"],
-                                   where=("lang", "aa", "zz"))
-    plan2 = plan_of(pruned, mode="simple")
-    lines = plan2.splitlines()
-    bcast_at = next(i for i, ln in enumerate(lines)
-                    if "BroadcastExchange" in ln)
-    for i, ln in enumerate(lines):
-        if "Exchange" in ln and "BroadcastExchange" not in ln:
-            assert i > bcast_at, plan2  # manifest-side subtree only
+    single = str(tmp_path / "store")
+    pipeline.run_encode(spark, pages, single, n_chunks=3)
+    stream = str(tmp_path / "stream")
+    for i in (0, 1):
+        part = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == i)
+        pipeline.run_encode(spark, part, f"{stream}/batches/{i:010d}",
+                            n_chunks=3)
+    for out in (single, stream):
+        decoded = pipeline.read_encoded(spark, out)
+        plan = plan_of(decoded, mode="simple")
+        assert "Exchange" not in plan and "Union" not in plan, plan
+        assert plan.count("Scan parquet") == 1, plan
+        assert decoded.count() == 800
+        # zone-map pruned read: exchanges may only touch the tiny manifest
+        # id set (the distinct beneath the BroadcastExchange) — never
+        # payload rows, so every Exchange line must sit BELOW the
+        # BroadcastExchange in the plan tree (the payload scan feeds
+        # MapInArrow directly)
+        pruned = pipeline.read_encoded(spark, out, columns=["lang"],
+                                       where=("lang", "aa", "zz"))
+        plan2 = plan_of(pruned, mode="simple")
+        assert "Union" not in plan2, plan2
+        lines = plan2.splitlines()
+        bcast_at = next(i for i, ln in enumerate(lines)
+                        if "BroadcastExchange" in ln)
+        for i, ln in enumerate(lines):
+            if "Exchange" in ln and "BroadcastExchange" not in ln:
+                assert i > bcast_at, plan2  # manifest-side subtree only
 
 
 def test_decode_map_detects_straddled_chunk(spark):
     """A chunk whose column rows straddle scan partitions must FAIL with
     instructions (shuffle=True), never decode wrongly."""
     import pytest
-    from json_to_parquet_spark.operators.encode import (decode_chunks,
+    from json_to_parquet_spark.operators.encode import (STORE_COL,
+                                                        decode_chunks,
                                                         encode_chunks)
     from json_to_parquet_spark.sources.webpages import synth_webpages
     pages = synth_webpages(spark, 300, partitions=2)
@@ -106,8 +117,34 @@ def test_decode_map_detects_straddled_chunk(spark):
     straddled = chunks.repartition(6)
     with pytest.raises(Exception, match="straddle|shuffle=True"):
         decode_chunks(straddled, pages.schema).count()
+    # with the sub-store tag present, the error names the sub-store too
+    tagged = chunks.withColumn(STORE_COL, F.lit("sub-a")).repartition(6)
+    with pytest.raises(Exception, match=r"chunks \[\('sub-a', \d+\)"):
+        decode_chunks(tagged, pages.schema).count()
     # the documented fallback handles exactly this shape
     assert decode_chunks(straddled, pages.schema, shuffle=True).count() == 300
+
+
+def test_decode_keys_chunks_by_sub_store(spark):
+    """Rows of two sub-stores that share chunk ids, interleaved within one
+    partition, must decode as separate chunks on both decode paths."""
+    from json_to_parquet_spark.operators.encode import (STORE_COL,
+                                                        decode_chunks,
+                                                        encode_chunks)
+    from json_to_parquet_spark.sources.webpages import synth_webpages
+    pages = synth_webpages(spark, 600, partitions=2)
+    parts = [encode_chunks(pages.filter(F.crc32("url") % 2 == i), "url",
+                           {"text": "plain"}, n_chunks=2)
+             .withColumn(STORE_COL, F.lit(f"sub-{i}")) for i in (0, 1)]
+    mixed = (parts[0].unionByName(parts[1]).repartition(1)
+             .sortWithinPartitions("chunk_id", "column"))
+    for shuffle in (False, True):
+        got = decode_chunks(mixed, pages.schema, shuffle=shuffle)
+        assert got.select("url").distinct().count() == got.count() == 600
+    # the shuffle path hands Python one chunk per call (grouped by the
+    # same key), never an arbitrary Arrow batch of many chunks
+    plan = plan_of(got, mode="simple")
+    assert "FlatMapGroupsInArrow" in plan and "MapInArrow" not in plan
 
 
 def test_embedding_neardup_single_scan(spark):

@@ -228,3 +228,109 @@ def test_direct_store_guard_non_local_master(spark, tmp_path):
                             n_chunks=2, direct_store=True,
                             store_is_shared=True)
     assert m["chunks_encoded"] == 2
+
+
+def _sub_stores(spark, parts, out, **kw):
+    """Encode each DataFrame in `parts` as one sub-store of a streaming
+    store at `out` (the layout encode_stream writes)."""
+    for i, part in enumerate(parts):
+        pipeline.run_encode(spark, part, f"{out}/batches/{i:010d}", **kw)
+
+
+def _kv(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
+        F.col("id").alias("v"))
+
+
+def test_streaming_store_colliding_chunk_ids(spark, tmp_path):
+    """Both sub-stores hold chunks 0..3 and every chunk file lands in ONE
+    scan task: each chunk must still decode on its own, keyed by
+    (sub-store, chunk_id), on the map path and on the shuffle path."""
+    from json_to_parquet_spark.operators.encode import verify_roundtrip
+    out = str(tmp_path / "enc")
+    _sub_stores(spark, [_kv(spark, 0, 1500), _kv(spark, 1500, 3000)], out,
+                key="k", n_chunks=4)
+    confs = {"spark.sql.files.maxPartitionBytes": "1g",
+             "spark.sql.files.openCostInBytes": "0",
+             "spark.sql.files.minPartitionNum": "1"}
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        got = pipeline.read_encoded(spark, out)
+        assert got.rdd.getNumPartitions() == 1
+        assert got.count() == 3000
+        assert pipeline.verify_encoded(spark, _kv(spark, 0, 3000), out,
+                                       mode="checksum")["ok"]
+        shuffled = pipeline.read_encoded(spark, out, shuffle=True)
+        row = verify_roundtrip(_kv(spark, 0, 3000), shuffled, "k",
+                               mode="checksum").collect()[0]
+        assert row.rows == 3000 and row.key_missing == 0 and row.v_bad == 0
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_streaming_store_prunes_per_sub_store(spark, tmp_path,
+                                              monkeypatch):
+    """Zone-map pruning is per (sub-store, chunk_id): sub-store 0 holds
+    v < 3000 and is pruned whole by a range inside sub-store 1, whose
+    chunks with the same ids must be kept."""
+    from json_to_parquet_spark.operators.encode import STORE_COL
+    out = str(tmp_path / "enc")
+    _sub_stores(spark, [_kv(spark, 0, 3000), _kv(spark, 3000, 6000)], out,
+                key="k", n_chunks=4)
+    seen = []  # the chunk rows that survive the anti-join, before decode
+    decode = pipeline.decode_chunks
+    monkeypatch.setattr(pipeline, "decode_chunks",
+                        lambda chunks, *a, **kw: seen.append(chunks)
+                        or decode(chunks, *a, **kw))
+    got = pipeline.read_encoded(spark, out, where=("v", 4000, 4100))
+    want = _kv(spark, 0, 6000).filter(F.col("v").between(4000, 4100)).count()
+    assert got.count() == want == 101
+    # the chunks the manifests predict: every chunk whose v range meets
+    # [4000, 4100] — none of sub-store 0, all four of sub-store 1
+    kept = {(d[-1], r.chunk_id) for d in ("0", "1")
+            for r in spark.read.parquet(
+                pipeline._manifest_path(f"{out}/batches/{int(d):010d}"))
+            .filter("column = 'v'").collect()
+            if int(r.max_val) >= 4000 and int(r.min_val) <= 4100}
+    assert kept == {("1", c) for c in range(4)}
+    read = {(r[STORE_COL][-1], r.chunk_id) for r in
+            seen[0].select(STORE_COL, "chunk_id").distinct().collect()}
+    assert read == kept
+
+
+def test_streaming_store_schema_mismatch_raises(spark, tmp_path):
+    """A sub-store whose table_meta schema differs from the first one's
+    must stop the read with a ValueError naming that sub-store."""
+    import json
+    import re
+    out = str(tmp_path / "enc")
+    _sub_stores(spark, [_kv(spark, 0, 500), _kv(spark, 500, 1000)], out,
+                key="k", n_chunks=2)
+    bad = f"{out}/batches/{1:010d}"
+    with open(f"{bad}/table_meta.json") as fh:
+        meta = json.load(fh)
+    meta["schema"] = _kv(spark, 0, 1).withColumn("w", F.lit(1)).schema.json()
+    with open(f"{bad}/table_meta.json", "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match=re.escape(f"sub-store {bad} ")):
+        pipeline.read_encoded(spark, out)
+
+
+def test_chunk_file_outside_chunk_dir_fails(spark, tmp_path):
+    """A chunk file that sits outside every chunk_id=N/ directory has no
+    chunk id: the read must fail, never decode it as chunk NULL."""
+    import glob
+    import shutil
+    out = str(tmp_path / "enc")
+    pipeline.run_encode(spark, _kv(spark, 0, 500), out, key="k", n_chunks=2)
+    src = sorted(glob.glob(f"{out}/chunks/chunk_id=*/*.parquet"))[0]
+    shutil.copy(src, f"{out}/chunks/part-stray.parquet")
+    with pytest.raises(Exception, match="outside chunk_id=N/"):
+        pipeline.read_encoded(spark, out).count()
