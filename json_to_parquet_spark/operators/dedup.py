@@ -253,6 +253,9 @@ def _bucket_pairs(banded: DataFrame, id_col: str,
             .distinct())
 
 
+CC_CHECKPOINT_ROUNDS = 5  # label-propagation rounds between lineage cuts
+
+
 def connected_components(pairs: DataFrame, src: str = "id_a",
                          dst: str = "id_b", max_iter: int = 20) -> DataFrame:
     """Connected components of an undirected pair graph by min-label
@@ -266,7 +269,12 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     graphs are near-diameter-1 (stars of near-identical docs), so this
     converges in 2-3 rounds in practice. A graph whose component
     diameter exceeds `max_iter` raises rather than silently returning
-    partial (wrong) labels — raise `max_iter` for long-chain graphs."""
+    partial (wrong) labels — raise `max_iter` for long-chain graphs.
+
+    Each round's plan holds the previous round's labels twice, so the
+    logical plan doubles per round; every `CC_CHECKPOINT_ROUNDS` rounds
+    the labels are `localCheckpoint`ed, which cuts the lineage and bounds
+    analysis time on long chains."""
     edges = (pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
              .unionByName(pairs.select(F.col(dst).alias("s"),
                                        F.col(src).alias("d")))
@@ -274,7 +282,7 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     labels = (edges.select(F.col("s").alias("id")).distinct()
               .withColumn("component", F.col("id")))
     changed = None
-    for _ in range(max_iter):
+    for rnd in range(1, max_iter + 1):
         neighbor_min = (edges.join(labels, edges.s == labels.id)
                         .groupBy(F.col("d").alias("id"))
                         .agg(F.min("component").alias("nmin")))
@@ -288,6 +296,9 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
                    .filter(F.col("component") != F.col("old")).count())
         labels.unpersist()  # no-op on the (unpersisted) first iteration
         labels = updated
+        if rnd % CC_CHECKPOINT_ROUNDS == 0:
+            labels = updated.localCheckpoint()  # eager: reads the cache
+            updated.unpersist()
         if changed == 0:
             break
     if changed:

@@ -26,22 +26,6 @@ import time
 
 import pyarrow as pa
 import pyarrow.compute as pc
-
-# One executor slot = one python worker = ONE core's budget. pyarrow's
-# internal pool defaults to os.cpu_count() threads PER WORKER (used by
-# take/sort_indices/parquet writes), so 32 concurrent workers spawn up
-# to 32x32 runnable threads and the sort/store phases thrash the
-# scheduler — measured as the encode stage scaling 0.70 while the
-# GIL-bound kernel alone scales 0.84. Executors import this module in
-# every worker process; the driver pays nothing (its arrow work is
-# row-count-sized).
-try:
-    pa.set_cpu_count(int(os.environ.get("SPARK_GRAFT_WORKER_ARROW_THREADS",
-                                        "1")))
-    pa.set_io_thread_count(
-        int(os.environ.get("SPARK_GRAFT_WORKER_ARROW_IO_THREADS", "1")))
-except Exception:  # pragma: no cover - pool already started
-    pass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T

@@ -144,6 +144,25 @@ def test_connected_components_transitive_chain(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 9, 10: 9}
 
 
+def test_connected_components_long_chain_bounded_lineage(spark):
+    """A path graph of diameter 12 needs 13 rounds: labels must converge
+    to the path's smallest id, and the lineage cut every
+    CC_CHECKPOINT_ROUNDS rounds must keep the returned plan small (each
+    round doubles it, so an uncut plan holds ~2**14 joins here)."""
+    from json_to_parquet_spark.operators.dedup import (CC_CHECKPOINT_ROUNDS,
+                                                       connected_components)
+    # path 100-101-...-112, listed in shuffled order; plus a disjoint pair
+    path = [(100 + i, 101 + i) for i in (7, 2, 11, 0, 5, 9, 3, 8, 1, 6, 10,
+                                         4)]
+    pairs = spark.createDataFrame(path + [(5, 6)], "id_a long, id_b long")
+    labels = connected_components(pairs)
+    comp = {r.id: r.component for r in labels.collect()}
+    assert comp == {**{100 + i: 100 for i in range(13)}, 5: 5, 6: 5}
+    plan = labels._jdf.queryExecution().logical().toString()
+    joins = sum("Join " in line for line in plan.splitlines())
+    assert joins < 2 ** (CC_CHECKPOINT_ROUNDS + 1), joins
+
+
 def test_minhash_dedup_transitive_cluster(spark):
     """Chain of near-dups A~B~C keeps exactly one representative even
     when A and C alone would not be near-dups."""
