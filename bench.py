@@ -8,8 +8,7 @@ Prints ONE JSON line:
 The encode benchmark generates the deterministic synthetic web-pages table
 (BASELINE.json input_hint shape) and runs the full two-pass pipeline
 (stats → codec selection → chunk encode → write chunk store + manifest);
-throughput is raw Arrow bytes in / wall seconds. Run
-tools/scaling_bench.py for the N-vs-4N parallelism comparison.
+throughput is raw Arrow bytes in / wall seconds.
 """
 
 from __future__ import annotations
@@ -24,39 +23,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 BENCH_WEBPAGE_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "150000"))
-
-
-def summarize_scaling(scaling_file: str) -> dict | None:
-    """Compact per-pair scaling summary for the one-line bench JSON.
-
-    The driver records only the LAST ~2000 chars of stdout and parses the
-    JSON line out of that tail — r3's full scaling blob pushed the queries
-    dict out of the window, so only eff/walls/GB-s are kept per pair; the
-    full evidence (trial walls, calibration, all rounds) stays in
-    tools/scaling_result.json. Small curated context keys (`recorded` —
-    the best clean-window protocol result on record — and `note`) pass
-    through when present so a storm-degraded latest session can't silently
-    displace the recorded criterion evidence.
-    """
-    if not os.path.exists(scaling_file):
-        return None
-    with open(scaling_file) as fh:
-        full = json.load(fh)
-    out: dict = {}
-    for pair, p in full.get("pairs", {}).items():
-        s = {
-            "eff": p.get("scaling_efficiency"),
-            "eff_hw_norm": p.get("scaling_efficiency_hw_normalized"),
-            "walls": {lvl: e.get("wall_s")
-                      for lvl, e in p.get("levels", {}).items()},
-            "gb_per_s": {lvl: e.get("gb_per_s")
-                         for lvl, e in p.get("levels", {}).items()},
-        }
-        for key in ("recorded", "note"):
-            if key in p:
-                s[key] = p[key]
-        out[pair] = s
-    return out
 
 
 def main() -> int:
@@ -136,9 +102,6 @@ def main() -> int:
 
     gbps = metrics["raw_bytes"] / max(encode_s, 1e-9) / 1e9
     total = round(sum(timings.values()), 3)
-    scaling = summarize_scaling(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "tools", "scaling_result.json"))
     print(json.dumps({
         "metric": "headline_queries_plus_encode_wall",
         "value": total,
@@ -156,7 +119,6 @@ def main() -> int:
             "codecs": metrics["codecs"],
             "json2parquet_mb_per_s": round(
                 json_bytes / 1e6 / max(json2parquet_s, 1e-9), 1),
-            "scaling_evidence": scaling,
         },
     }, separators=(",", ":")))
     return 0

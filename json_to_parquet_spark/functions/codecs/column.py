@@ -367,20 +367,12 @@ def encode_column(arr, codec, params: dict | None = None) -> tuple[bytes, dict]:
     sections.update(vsec)
     meta["codec"] = actual
     meta["values"] = vmeta
-    payload = pack_sections(sections)
-    # optional cascade: general-purpose compression over the lightweight
-    # encoding, for sinks without their own block compression (the parquet
-    # chunk store already applies snappy, so this is off by default)
-    if params and params.get("post") == "deflate":
-        import zlib
-        compressed = zlib.compress(payload, 6)
-        if len(compressed) < len(payload):
-            meta["post"] = "deflate"
-            payload = compressed
-    return payload, meta
+    return pack_sections(sections), meta
 
 
 def decode_column(payload: bytes, meta: dict) -> pa.Array:
+    # chunks written by older engine versions may carry a deflate layer
+    # over the lightweight encoding (meta "post")
     if meta.get("post") == "deflate":
         import zlib
         payload = zlib.decompress(payload)

@@ -21,7 +21,6 @@ encoding layer is explicit and native to the engine.
 from __future__ import annotations
 
 import hashlib
-import os
 import time
 
 import pyarrow as pa
@@ -123,12 +122,12 @@ def _write_chunk_file(store_dir: str, chunk_id: int, table: pa.Table) -> None:
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(store_dir, f".tmp-{uuid.uuid4().hex}.parquet")
     # payloads are already codec-compressed — snappy on top would burn
-    # CPU in exactly the stage the scaling criterion measures. Likewise
-    # pyarrow's DEFAULTS are hostile here: use_dictionary hashes every
-    # multi-MB payload value into a dict that can never win, and
-    # write_statistics computes min/max comparisons over those same
-    # blobs — at 32 concurrent workers that burned 2-3x the encode
-    # kernel's own core-seconds. PLAIN, stats off.
+    # encode-stage CPU for next to no size gain. Likewise pyarrow's
+    # DEFAULTS are hostile here: use_dictionary hashes every multi-MB
+    # payload value into a dict that can never win, and write_statistics
+    # computes min/max comparisons over those same blobs — at 32
+    # concurrent workers that burned 2-3x the encode kernel's own
+    # core-seconds. PLAIN, stats off.
     pq.write_table(table, tmp, compression="none", use_dictionary=False,
                    write_statistics=False)
     os.replace(tmp, os.path.join(d, _STORE_FILE))
@@ -140,28 +139,14 @@ def _write_chunk_file(store_dir: str, chunk_id: int, table: pa.Table) -> None:
                 pass
 
 
-def _encode_group_fn(key_col: str, columns: list[str], codecs: dict,
-                     arrow_schema: pa.Schema, sort_cols: list[str],
-                     store_dir: str | None = None,
-                     presorted: bool = False,
-                     skip_store_write: bool = False):
+def _encode_group_fn(columns: list[str], codecs: dict,
+                     arrow_schema: pa.Schema, store_dir: str | None = None):
     out_fields = CHUNK_ARROW
-    sort_keys = [(c, "ascending") for c in sort_cols]
 
     def fn(table: pa.Table) -> pa.Table:
+        # rows arrive in the chunk-local permutation, applied by the JVM
+        # group sort (see encode_chunks)
         chunk_id = int(table.column(CHUNK_COL)[0].as_py())
-        # deterministic chunk-local row permutation: low-cardinality
-        # columns first (→ long runs for RLE/dict), then
-        # timestamps/ints (→ narrow deltas), unique key last as the
-        # total-order tiebreak (cf. column-permutation-for-RLE,
-        # SIGMOD 2020). When `presorted`, the permutation was already
-        # applied by the JVM's Tungsten sort inside the shuffle-read
-        # stage (sortWithinPartitions with asc_nulls_last — the same
-        # order pyarrow's at_end produces), so the worker skips the
-        # sort AND the 2x-chunk-size take() gather.
-        if not presorted:
-            order = pc.sort_indices(table, sort_keys=sort_keys)
-            table = table.take(order)
         cols: dict[str, list] = {name: [] for name, _ in out_fields}
         for c in columns:
             t0 = time.perf_counter()
@@ -195,13 +180,10 @@ def _encode_group_fn(key_col: str, columns: list[str], codecs: dict,
         # direct store write: persist the payload rows HERE (Arrow →
         # parquet, no JVM round-trip) and return manifest rows only —
         # the partition column chunk_id lives in the directory name
-        if not skip_store_write:  # perf-isolation hook (flag captured
-            # DRIVER-side at plan time so manifest status can't disagree
-            # with what the workers actually did)
-            file_tbl = pa.table(
-                {name: pa.array(cols[name], type=t)
-                 for name, t in out_fields if name != "chunk_id"})
-            _write_chunk_file(store_dir, chunk_id, file_tbl)
+        file_tbl = pa.table(
+            {name: pa.array(cols[name], type=t)
+             for name, t in out_fields if name != "chunk_id"})
+        _write_chunk_file(store_dir, chunk_id, file_tbl)
         return pa.table(
             {name: pa.array(cols[name], type=t) for name, t in out_fields
              if name != "payload"})
@@ -210,7 +192,8 @@ def _encode_group_fn(key_col: str, columns: list[str], codecs: dict,
 
 def encode_chunks(df: DataFrame, key: str, codecs: dict,
                   n_chunks: int, sort_cols: list[str] | None = None,
-                  store_dir: str | None = None) -> DataFrame:
+                  store_dir: str | None = None, *,
+                  _todo_chunks: int | None = None) -> DataFrame:
     """Encode `df` into per-(chunk, column) payload rows.
 
     `codecs` maps column → codec name or codec-plan dict (shared state).
@@ -222,31 +205,30 @@ def encode_chunks(df: DataFrame, key: str, codecs: dict,
     rename, idempotent) and the returned DataFrame carries only the
     payload-free manifest rows (MANIFEST_SCHEMA). This keeps the encoded
     bytes out of the JVM entirely — the default path sends every payload
-    Arrow→JVM and through the JVM parquet writer, which at 32 cores was
-    the dominant non-kernel cost of the N→4N scaling criterion (and at
-    100 TB means the JVM re-serializes ~50 TB it never needs to see).
+    Arrow→JVM and through the JVM parquet writer, which re-serializes
+    bytes the JVM never needs to see (~50 TB of them at 100 TB).
 
     The explicit repartition pins the shuffle width to ~one chunk per
     task instead of `spark.sql.shuffle.partitions` (= cores): with the
     default width, 256 chunks hash into 32 partitions as 5-13-chunk
-    lumps, and the straggler tail costs ~45% of wall at 32 cores (the
-    4N side of the scaling criterion suffers more than the N side —
-    relative imbalance shrinks with chunks-per-task). The groupBy reuses
-    this exchange (ClusteredDistribution on the grouping column is
-    already satisfied), so the plan still has exactly ONE shuffle.
+    lumps, and the slowest lump sets the stage's wall (~45% of it at 32
+    cores). The groupBy reuses this exchange (ClusteredDistribution on
+    the grouping column is already satisfied), so the plan still has
+    exactly ONE shuffle.
 
     Straggler control: hashing k distinct chunk ids into k partitions is
     balls-in-bins — ~37% of tasks get nothing while others serialize 2-3
-    chunks, and that tail quantum hurts the wide (4N) leg of the scaling
-    criterion far more than the narrow one (a 2-chunk straggler is a
-    whole extra chunk-encode on the last of 8 waves at 32 cores, but
-    noise across 32 waves at 8). So for ≤8192 chunks the shuffle/group
-    column is `perfect_shuffle_salts(n)[chunk_id]` — a bijective
-    relabeling whose Murmur3 perfect-hashes into exactly one chunk per
-    partition, zero empties (the group fn reads the REAL chunk id from
-    the chunk column, so ids stay 0..n-1 everywhere downstream). Beyond
-    8192 chunks (the 100 TB regime, ~3M chunks) tasks carry ~50 chunks
-    each under a 65536-partition cap and collisions average out."""
+    chunks, and a 2-chunk straggler is a whole extra chunk-encode on the
+    stage's last wave. So for ≤8192 chunks the shuffle/group column is
+    `perfect_shuffle_salts(n)[chunk_id]` — a bijective relabeling whose
+    Murmur3 perfect-hashes into exactly one chunk per partition, zero
+    empties (the group fn reads the REAL chunk id from the chunk column,
+    so ids stay 0..n-1 everywhere downstream). Beyond 8192 chunks (the
+    100 TB regime, ~3M chunks) tasks carry ~50 chunks each under a
+    65536-partition cap and collisions average out; there the width is
+    the number of chunks this run encodes (`_todo_chunks`, set by a
+    resumed run_encode), not `n_chunks`, so a resume never schedules
+    one near-empty task per already-complete chunk."""
     columns = [f.name for f in df.schema.fields]
     aschema = arrow_schema_for(df.schema)
     sort_cols = [c for c in (sort_cols or []) if c != key] + [key]
@@ -256,15 +238,12 @@ def encode_chunks(df: DataFrame, key: str, codecs: dict,
     # column, and sortWithinPartitions(group, *sort_cols) satisfies that
     # prefix — Catalyst inserts NO second sort (plan-asserted in tests),
     # so the full permutation costs one Tungsten radix sort inside the
-    # shuffle-read stage and the python worker skips pc.sort_indices +
-    # the 2x-chunk-size take() gather. asc_nulls_last == pyarrow at_end,
-    # keeping payload bytes identical to the worker-sorted path
-    # (SPARK_GRAFT_PYSORT=1 forces the old path; bit-identity is tested).
-    presort = not os.environ.get("SPARK_GRAFT_PYSORT")
-    skip_write = bool(os.environ.get("SPARK_GRAFT_SKIP_STORE_WRITE"))
-    fn = _encode_group_fn(key, columns, codecs, aschema, sort_cols,
-                          store_dir=store_dir, presorted=presort,
-                          skip_store_write=skip_write)
+    # shuffle-read stage and the python worker never sorts or gathers.
+    # Low-cardinality columns come first (→ long runs for RLE/dict), then
+    # timestamps/ints (→ narrow deltas), the unique key last as the
+    # total-order tiebreak (cf. column-permutation-for-RLE, SIGMOD 2020);
+    # nulls sort last within each column.
+    fn = _encode_group_fn(columns, codecs, aschema, store_dir=store_dir)
     out_schema = MANIFEST_SCHEMA if store_dir is not None else CHUNK_SCHEMA
     order = [F.asc_nulls_last(c) for c in sort_cols]
     if n_chunks <= 8192:
@@ -274,19 +253,16 @@ def encode_chunks(df: DataFrame, key: str, codecs: dict,
             F.col(CHUNK_COL) + 1).alias(SALT_COL)
         chunked = chunked.withColumn(SALT_COL, salt_col)
         chunked = chunked.repartition(n_chunks, SALT_COL)
-        if presort:
-            # group col uses plain asc (nulls-first default) so the
-            # child ordering STRUCTURALLY satisfies applyInArrow's
-            # required ordering — a nulls-last salt would make Catalyst
-            # insert its own (order-destroying) re-sort. Salt is
-            # non-null, so the payload bytes are unaffected.
-            chunked = chunked.sortWithinPartitions(
-                F.asc(SALT_COL), *order)
+        # group col uses plain asc (nulls-first default) so the child
+        # ordering STRUCTURALLY satisfies applyInArrow's required
+        # ordering — a nulls-last salt would make Catalyst insert its own
+        # (order-destroying) re-sort. Salt is non-null, so the payload
+        # bytes are unaffected.
+        chunked = chunked.sortWithinPartitions(F.asc(SALT_COL), *order)
         return chunked.groupBy(SALT_COL).applyInArrow(fn, schema=out_schema)
-    n_part = min(max(n_chunks, 1), 65536)
-    chunked = chunked.repartition(n_part, CHUNK_COL)
-    if presort:
-        chunked = chunked.sortWithinPartitions(F.asc(CHUNK_COL), *order)
+    width = n_chunks if _todo_chunks is None else _todo_chunks
+    chunked = chunked.repartition(min(max(width, 1), 65536), CHUNK_COL)
+    chunked = chunked.sortWithinPartitions(F.asc(CHUNK_COL), *order)
     return chunked.groupBy(CHUNK_COL).applyInArrow(fn, schema=out_schema)
 
 

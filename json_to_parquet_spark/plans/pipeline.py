@@ -56,8 +56,6 @@ def _plan_to_json(plan: dict[str, dict]) -> dict:
         if "symbols" in e:
             j["symbols"] = [s.hex() for s in e["symbols"]]
             j["codes"] = list(e["codes"])
-        if "post" in e:
-            j["post"] = e["post"]
         out[c] = j
     return out
 
@@ -69,8 +67,6 @@ def _plan_from_json(j: dict) -> dict[str, dict]:
         if "symbols" in e:
             p["symbols"] = [bytes.fromhex(s) for s in e["symbols"]]
             p["codes"] = list(e["codes"])
-        if "post" in e:
-            p["post"] = e["post"]
         plan[c] = p
     return plan
 
@@ -132,8 +128,9 @@ def completed_chunks(spark: SparkSession, out_dir: str,
         m = spark.read.parquet(path)
     except Exception:
         return None
-    # rows from a SKIP_STORE_WRITE perf run carry status='skipped' — they
-    # have no backing chunk files and must not mark a chunk complete
+    # only 'ok' rows count: stores written by older engine versions can
+    # hold rows with other statuses (e.g. 'skipped', a run that wrote no
+    # chunk files), which must not mark a chunk complete
     m = m.filter(F.col("status") == "ok")
     return (m.groupBy("chunk_id")
             .agg(F.countDistinct("column").alias("ncols"))
@@ -148,7 +145,6 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
                sample_rows: int = 1_000_000,
                target_chunk_bytes: int = 32 << 20, resume: bool = True,
                max_chunks_this_run: int | None = None,
-               post_compress: str | None = None,
                direct_store: bool | None = None,
                store_is_shared: bool = False) -> dict:
     """Run (or resume) the encode pipeline. Returns run metrics.
@@ -220,9 +216,6 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         if codecs is None:
             codecs = choose_codecs(stats, src.schema)
         plan = build_codec_plan(stats, src.schema, codecs)
-        if post_compress:
-            for entry in plan.values():
-                entry["post"] = post_compress
         sort_order = choose_sort_order(stats, src.schema, key)
         stats_wall = time.perf_counter() - t_stats
         if est_rows is None:
@@ -253,6 +246,9 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
     # (the done set can be millions of ids — never an isin literal list)
     done = completed_chunks(spark, out_dir, len(columns)) if resume else None
     done_count = done.count() if done is not None else 0
+    # chunks this run encodes: sizes the encode shuffle beyond the
+    # perfect-salt range (see encode_chunks)
+    todo_count = n_chunks - done_count
     todo_limited = None
     chunked = with_chunk_id(src, key, n_chunks)
     if done_count:
@@ -279,6 +275,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
                     "stats_s": round(stats_wall, 3),
                     "plan_source": plan_source,
                     "encode_s": 0.0, "manifest_s": 0.0}
+        todo_count = len(todo_rows)
         todo_limited = spark.createDataFrame(todo_rows, "chunk_id int")
         chunked = chunked.join(
             F.broadcast(todo_limited.withColumnRenamed("chunk_id", CHUNK_COL)),
@@ -298,18 +295,13 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         os.makedirs(_chunks_path(out_dir), exist_ok=True)
         rows = encode_chunks(chunked.drop(CHUNK_COL), key, plan, n_chunks,
                              sort_cols=sort_order,
-                             store_dir=_chunks_path(out_dir))
-        # the perf-isolation hook suppresses the worker chunk-file writes;
-        # its manifest rows must say so, or a stray env var would yield a
-        # store that claims 'ok' with zero data files (and resume would
-        # treat the hollow chunks as complete)
-        status = ("skipped" if os.environ.get("SPARK_GRAFT_SKIP_STORE_WRITE")
-                  else "ok")
+                             store_dir=_chunks_path(out_dir),
+                             _todo_chunks=todo_count)
         manifest = rows.select(
             "chunk_id", "column", "codec", "n_rows", "raw_bytes",
             "enc_bytes", "checksum", "wall_ms", "min_val", "max_val") \
             .withColumn("run_id", F.lit(run_id)) \
-            .withColumn("status", F.lit(status))
+            .withColumn("status", F.lit("ok"))
         manifest.write.mode("append").parquet(_manifest_path(out_dir))
         encode_wall = time.perf_counter() - t_encode
         t_manifest = time.perf_counter()
@@ -317,7 +309,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             .filter(F.col("run_id") == run_id)
     else:
         chunks = encode_chunks(chunked.drop(CHUNK_COL), key, plan, n_chunks,
-                               sort_cols=sort_order)
+                               sort_cols=sort_order, _todo_chunks=todo_count)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # dynamic partition overwrite on chunk_id: a resumed run replaces
         # only the chunk directories it re-encodes. Each chunk's rows sit

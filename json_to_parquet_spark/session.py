@@ -72,10 +72,8 @@ def get_spark(app: str = "json_to_parquet_spark", cores: int | None = None,
         .config("spark.driver.extraJavaOptions",
                 "-XX:+UnlockDiagnosticVMOptions "
                 "-XX:GCLockerRetryAllocationCount=100")
-        .config("spark.shuffle.compress",
-                os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"))
+        .config("spark.shuffle.compress", "true")
+        .config("spark.io.compression.codec", "zstd")
     )
     # local mode: all executor threads share one machine disk, so shuffle
     # through tmpfs when available — on a real cluster shuffle I/O is

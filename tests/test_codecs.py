@@ -163,3 +163,14 @@ def test_compression_actually_compresses():
 def test_fsst_fallback_recorded_in_meta():
     _, meta = encode_column(F3_COLUMNS["raw_bytes"], "fsst")
     assert meta["codec"] == "plain"  # full-alphabet binary → no free codes
+
+
+def test_decode_deflate_post_layer():
+    """Chunks written by older engine versions may wrap the encoded
+    payload in a deflate layer (meta "post"); decode still reads them."""
+    import zlib
+    arr = pa.array(["a", None, "bb", "a", "ccc"] * 40)
+    payload, meta = encode_column(arr, "dict")
+    meta = meta_from_json(meta_to_json(dict(meta, post="deflate")))
+    out = decode_column(zlib.compress(payload, 6), meta)
+    assert out.equals(arr)

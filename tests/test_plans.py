@@ -259,23 +259,36 @@ def test_encode_one_chunk_per_task(spark):
     assert len(sizes) == 16 and all(r.k == 1 for r in sizes)
 
 
-def test_encode_jvm_presort_one_sort_bit_identical(spark, monkeypatch):
+def test_encode_jvm_presort_one_sort_bit_identical(spark):
     """The chunk-local row permutation rides the JVM group sort: the plan
     has exactly ONE Sort (sortWithinPartitions satisfies applyInArrow's
     required ordering — no Catalyst re-sort that could scramble rows) and
-    ONE Exchange, and payload checksums are byte-identical to the
-    worker-side pyarrow sort path (null ordering included)."""
-    import os
+    ONE Exchange, and every chunk's decoded rows are already in the
+    permutation's order, nulls last (pyarrow's at_end placement)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
+    from json_to_parquet_spark.functions.codecs import (decode_column,
+                                                        meta_from_json)
     from json_to_parquet_spark.operators.encode import encode_chunks
-    from json_to_parquet_spark.sources.webpages import synth_webpages
-    df = synth_webpages(spark, 6000, seed=11)
-    codecs = {"url": "fsst", "lang": "dict", "warc_ts": "for"}
-    chunks = encode_chunks(df, "url", codecs, n_chunks=5)
+    df = spark.range(0, 6000).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        F.when(F.col("id") % 5 != 0, F.concat(
+            F.lit("l"), (F.col("id") % 3).cast("string"))).alias("lang"),
+        F.when(F.col("id") % 7 != 0, F.col("id") % 11).alias("bucket"))
+    sort_cols = ["lang", "bucket"]
+    codecs = {"url": "fsst", "lang": "dict", "bucket": "for"}
+    chunks = encode_chunks(df, "url", codecs, n_chunks=5, sort_cols=sort_cols)
     plan = chunks._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Sort ") == 1 and plan.count("Exchange") == 1
-    a = {(r.chunk_id, r.column): r.checksum for r in chunks.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_PYSORT", "1")
-    b = {(r.chunk_id, r.column): r.checksum
-         for r in encode_chunks(df, "url", codecs, n_chunks=5).collect()}
-    assert a == b and len(a) == 25
+    decoded: dict[int, dict] = {}
+    for r in chunks.select("chunk_id", "column", "meta", "payload").collect():
+        decoded.setdefault(r.chunk_id, {})[r.column] = decode_column(
+            bytes(r.payload), meta_from_json(r.meta))
+    assert len(decoded) == 5 and all(len(c) == 3 for c in decoded.values())
+    keys = [(c, "ascending") for c in sort_cols + ["url"]]
+    for cols in decoded.values():
+        tbl = pa.table(cols)
+        assert tbl.column("lang").null_count and tbl.column("bucket").null_count
+        order = pc.sort_indices(tbl, sort_keys=keys, null_placement="at_end")
+        assert order.to_pylist() == list(range(tbl.num_rows))

@@ -111,20 +111,6 @@ def test_ingest_reference_semantics(spark, tmp_path):
     assert None in g_vals               # {"x": null} struct → NULL
 
 
-def test_deflate_cascade_roundtrip(spark, tmp_path):
-    """Optional post-compression on top of the lightweight codecs."""
-    from json_to_parquet_spark.plans import pipeline
-    from json_to_parquet_spark.sources.webpages import synth_webpages
-    pages = synth_webpages(spark, 1500, seed=13)
-    out = str(tmp_path / "enc")
-    m = pipeline.run_encode(spark, pages, out, n_chunks=3,
-                            post_compress="deflate")
-    plain = str(tmp_path / "plainenc")
-    m2 = pipeline.run_encode(spark, pages, plain, n_chunks=3)
-    assert m["enc_bytes"] < m2["enc_bytes"]
-    assert pipeline.verify_encoded(spark, pages, out)["ok"]
-
-
 def test_ingest_concatenated_docs(spark, tmp_path):
     """Back-to-back {...}{...} files (the reference splitter's input,
     src/JsonFormater.java:32-46) — including braces inside strings and

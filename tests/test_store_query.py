@@ -141,8 +141,9 @@ def test_fresh_run_cleans_stale_layout(spark, tmp_path):
 
 def test_resume_filter_scales_to_many_chunks(spark, tmp_path):
     """Resume filtering is a broadcast anti-join, not an isin literal
-    list: with 50k completed chunks the plan must stay small and the run
-    must complete."""
+    list: with 50k completed chunks the plan must stay small, the encode
+    shuffle must be sized by the chunks left to encode, and the run must
+    complete."""
     import json
     import os
     df = spark.range(0, 500).select(
@@ -171,8 +172,23 @@ def test_resume_filter_scales_to_many_chunks(spark, tmp_path):
                    "codec_plan": {"k": {"codec": "plain"},
                                   "v": {"codec": "for"}},
                    "sort_order": ["k"]}, fh)
-    m = pipeline.run_encode(spark, df, out, key="k", n_chunks=n_chunks)
+    sc = spark.sparkContext
+    group = "resume-many-chunks"
+    sc.setJobGroup(group, "resume over a 50k-chunk manifest")
+    try:
+        m = pipeline.run_encode(spark, df, out, key="k", n_chunks=n_chunks)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
     assert m["chunks_skipped"] == 50_000
+    # the encode shuffle is sized by the 10k chunks left to encode, not
+    # by n_chunks (one near-empty task per already-complete chunk)
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup(group)
+              for s in st.getJobInfo(j).stageIds]
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert tasks and max(tasks) <= 10_000
     # only rows hashing OUTSIDE the 50k "done" chunks were encoded
     from json_to_parquet_spark.operators.chunking import with_chunk_id
     expect = with_chunk_id(df, "k", n_chunks) \
@@ -180,24 +196,22 @@ def test_resume_filter_scales_to_many_chunks(spark, tmp_path):
     assert m["rows"] == expect
 
 
-def test_skip_store_write_marks_manifest_skipped(spark, tmp_path,
-                                                 monkeypatch):
-    """The SPARK_GRAFT_SKIP_STORE_WRITE perf-isolation hook suppresses
-    chunk-file writes; its manifest rows must carry status='skipped' (not
-    'ok'), and a later real run must NOT treat the hollow chunks as
-    complete (ADVICE r3)."""
+def test_resume_ignores_non_ok_manifest_rows(spark, tmp_path):
+    """Only manifest rows with status='ok' mark a chunk complete. Stores
+    written by older engine versions can hold 'skipped' rows (a run that
+    wrote no chunk files); a resume over such a store must re-encode
+    those chunks, not trust them."""
+    import shutil
     df = spark.range(0, 3000).select(
         F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
         F.col("id").alias("v"))
     out = str(tmp_path / "enc")
-    monkeypatch.setenv("SPARK_GRAFT_SKIP_STORE_WRITE", "1")
     pipeline.run_encode(spark, df, out, key="k", n_chunks=4)
     man = spark.read.parquet(out + "/manifest")
-    assert man.filter(F.col("status") != "skipped").count() == 0
-    import glob
-    assert glob.glob(out + "/chunks/chunk_id=*/*.parquet") == []
-    monkeypatch.delenv("SPARK_GRAFT_SKIP_STORE_WRITE")
-    # resumed REAL run: skipped chunks don't count as done → full encode
+    skipped = man.withColumn("status", F.lit("skipped"))
+    spark.createDataFrame(skipped.collect(), skipped.schema) \
+        .write.mode("overwrite").parquet(out + "/manifest")
+    shutil.rmtree(out + "/chunks")
     m = pipeline.run_encode(spark, df, out, key="k", n_chunks=4)
     assert m["chunks_skipped"] == 0 and m["chunks_encoded"] == 4
     assert pipeline.read_encoded(spark, out).count() == 3000
