@@ -2,7 +2,7 @@
 
 Pure driver-side function over the (tiny) collected stats dict; the
 decision manifest is broadcast into the encode stage implicitly via the
-applyInPandas closure (a dict of a few strings — not task-sized state).
+applyInArrow closure (a dict of a few strings — not task-sized state).
 
 Decision rules (heuristics mirroring the classic lightweight-compression
 selection literature — dictionary/RLE/FOR/FSST — tuned on the synthetic

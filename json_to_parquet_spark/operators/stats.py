@@ -1,55 +1,57 @@
 """Pass-1 column statistics (SURVEY §2C row 1).
 
-Two complementary collectors, both fully distributed:
+`collect_stats` reads the (sampled) input in ONE Spark job, with no
+shuffle and no pandas: a `mapInArrow` over
+`df.select(*cols, *[xxhash64(c) for c in cols])`. Each task folds its
+Arrow batches with Arrow compute and numpy into one partial row:
 
-1. `global_column_stats` — one JVM-side aggregate pass using built-in
-   functions only (count / min / max / approx_count_distinct / avg length).
-   Catalyst plans partial+final aggregation; stays in whole-stage codegen.
+  - rows, non-null count, summed character length (string/binary);
+  - typed min/max of the other columns;
+  - value changes per Arrow batch, +1 per batch (the RLE signal);
+  - the byte histogram of each batch's first 256 non-null values of
+    string/binary columns (the FSST signal);
+  - HyperLogLog registers (p=12) over the JVM's xxhash64 of each
+    non-null value (the distinct estimate);
+  - in the first 64 tasks, the first <=400 rows of each string/binary
+    column, capped at SAMPLE_BLOB_BYTES (the driver's sample blob for
+    shared codec state).
 
-2. `byte_and_run_stats` — signals the built-ins can't express: average
-   run length (RLE signal) and the byte-usage bitmap / top-byte skew of
-   string & binary columns (FSST signal). Computed per Arrow batch in
-   `mapInPandas` with numpy (zero per-row Python), then merged with
-   built-in aggregates (`sum`, `bit_or`).
-
-Both run on a sample (`sample_fraction`) — at 10^12 docs pass 1 must not
-read the full table; codec choice only needs distribution shape.
-
-The merged result is a small per-column dict consumed by
-`selector.choose_codecs` on the driver.
+The driver merges the partials (sums, register max, bitmap OR), renders
+min/max in the zone-map form `str(scalar.as_py())`, and joins the row
+heads in partition order, cut as `limit(400)` cuts rows. Pass 1 reads a
+sample (`sample_fraction`): codec choice needs distribution shape only.
 """
 
 from __future__ import annotations
 
+import math
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _BYTES_TYPES = (T.StringType, T.BinaryType)
-
-_BATCH_SCHEMA = T.StructType([
-    T.StructField("column", T.StringType()),
-    T.StructField("n", T.LongType()),
-    T.StructField("changes", T.LongType()),
-    T.StructField("sampled_bytes", T.LongType()),
-    T.StructField("top_byte_cnt", T.LongType()),
-    T.StructField("b0", T.LongType()),
-    T.StructField("b1", T.LongType()),
-    T.StructField("b2", T.LongType()),
-    T.StructField("b3", T.LongType()),
-])
+# adjacent nulls count as a change in these columns and as one run
+# elsewhere: pandas' NaN/NaT semantics, which the RLE signal was tuned with
+_NULL_RUNS_BREAK = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                    T.FloatType, T.DoubleType, T.TimestampType,
+                    T.TimestampNTZType)
 
 _VALUES_PER_BATCH_SAMPLE = 256  # values whose bytes feed the byte histogram
-
-
-def _bitmap_to_longs(used: np.ndarray) -> list[int]:
-    """256-bit byte-usage bitmap → 4 int64 words (two's complement)."""
-    bits = np.packbits(used.astype(np.uint8), bitorder="little")
-    return [int(w) for w in bits.view(np.int64)]
+SAMPLE_BLOB_VALUES = 400      # rows per bytes-column for the driver sample
+SAMPLE_BLOB_BYTES = 256 << 10  # cap per column
+# only the first tasks ship their row heads, which bounds what the driver
+# takes in at any partition count; the blob is then exactly limit()'s
+# whenever these partitions hold SAMPLE_BLOB_VALUES sampled rows
+_HEAD_TASKS = 64
+_HLL_P = 12                   # 4096 registers, ~1.6% standard error
+_HLL_Q = 64 - _HLL_P
 
 
 def longs_to_bitmask(words: list[int]) -> np.ndarray:
@@ -58,86 +60,123 @@ def longs_to_bitmask(words: list[int]) -> np.ndarray:
     return np.unpackbits(arr, bitorder="little").astype(bool)
 
 
-def longs_to_bitcount(words: list[int]) -> int:
-    return int(longs_to_bitmask(words).sum())
+def _value_bytes(arr: pa.Array) -> np.ndarray:
+    """The concatenated bytes of a null-free string/binary array."""
+    arr = arr.cast(pa.large_binary())
+    if not len(arr) or arr.buffers()[2] is None:
+        return np.empty(0, np.uint8)
+    o = np.frombuffer(arr.buffers()[1], np.int64)[arr.offset:][:len(arr) + 1]
+    return np.frombuffer(arr.buffers()[2], np.uint8)[o[0]:o[-1]]
 
 
-def _batch_stats_fn(columns: list[str], bytes_cols: set[str]):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for c in columns:
-                s = pdf[c]
-                n = len(s)
-                if n == 0:
+def _changes(arr: pa.Array, null_runs_break: bool) -> int:
+    """Value changes between adjacent rows, +1 (the batch's first run);
+    nested values (no equality kernel) count every row as a run."""
+    if len(arr) < 2 or pa.types.is_nested(arr.type):
+        return len(arr)
+    a, b = arr.slice(1), arr.slice(0, len(arr) - 1)
+    ne = pc.not_equal(a, b)
+    if arr.null_count:
+        va, vb = a.is_valid(), b.is_valid()
+        ne = pc.if_else(pc.and_(va, vb), ne,
+                        pc.or_(pc.xor(va, vb), null_runs_break))
+    return (pc.sum(ne).as_py() or 0) + 1
+
+
+def _hll_update(reg: np.ndarray, hashes: np.ndarray) -> None:
+    """Fold 64-bit hashes into HLL registers: the top P bits pick the
+    register, the rank is 1 + leading zeros of the other Q bits."""
+    h = hashes.view(np.uint64)
+    low = (h & np.uint64((1 << _HLL_Q) - 1)).astype(np.float64)  # exact
+    rank = (_HLL_Q + 1 - np.frexp(low)[1]).astype(np.uint8)
+    np.maximum.at(reg, (h >> np.uint64(_HLL_Q)).astype(np.intp), rank)
+
+
+def _hll_estimate(reg: np.ndarray) -> int:
+    """Ertl's improved raw estimator ("New cardinality estimation
+    algorithms for HyperLogLog sketches", 2017): no bias tables, accurate
+    from 0 to far beyond 2^32 distinct values. Its tau term, for
+    registers at rank Q+1 (probability 2^-Q per value), is replaced by
+    one more halving step."""
+    m = reg.size
+    c = np.bincount(reg, minlength=_HLL_Q + 2)
+    if c[0] == m:
+        return 0
+    z = 0.0
+    for k in range(_HLL_Q + 1, 0, -1):
+        z = 0.5 * (z + c[k])
+    x = s = c[0] / m                      # sigma(x)
+    y, prev = 1.0, -1.0
+    while s != prev:
+        x, prev = x * x, s
+        s, y = s + x * y, y + y
+    return int(round(m * m / (2 * math.log(2)) / (z + m * s)))
+
+
+def _partial_fn(is_bytes: list[bool], ordered: list[bool],
+                null_runs: list[bool]):
+    """mapInArrow body: one partial row per task (see module doc). The
+    per-column counters, HLL registers and byte bitmaps travel as numpy
+    arrays, zlib-packed into one binary field each (a sparse sample
+    leaves most registers 0)."""
+    k = len(is_bytes)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        n, head_rows = 0, SAMPLE_BLOB_VALUES \
+            if TaskContext.get().partitionId() < _HEAD_TASKS else 0
+        cnt = np.zeros((k, 5), np.int64)  # non_null, changes, len, hb, top
+        regs = np.zeros((k, 1 << _HLL_P), np.uint8)
+        used = np.zeros((k, 32), np.uint8)
+        heads, ext = [[] for _ in range(k)], [[] for _ in range(k)]
+        for b in batches:
+            types = b.schema.types
+            take = max(0, min(b.num_rows, head_rows - n))
+            n += b.num_rows
+            for i in range(k):
+                arr = b.column(i)
+                cnt[i, 0] += len(arr) - arr.null_count
+                cnt[i, 1] += _changes(arr, null_runs[i])
+                hashes = b.column(k + i).to_numpy()
+                if arr.null_count:
+                    hashes = hashes[arr.is_valid().to_numpy(
+                        zero_copy_only=False)]
+                _hll_update(regs[i], hashes)
+                if ordered[i] and len(arr) > arr.null_count:
+                    ext[i].append(pc.min_max(arr))
+                if not is_bytes[i]:
                     continue
-                # run-length signal: number of value changes (nulls count
-                # as values; object equality works for str/bytes)
-                vals = s.to_numpy()
-                try:
-                    changes = int((vals[1:] != vals[:-1]).sum()) + 1
-                except Exception:
-                    changes = n
-                sampled_bytes = top_cnt = 0
-                words = [0, 0, 0, 0]
-                if c in bytes_cols:
-                    sample = s.dropna().head(_VALUES_PER_BATCH_SAMPLE)
-                    if len(sample):
-                        blob = b"".join(
-                            v.encode("utf-8", "surrogatepass")
-                            if isinstance(v, str) else v
-                            for v in sample
-                        )
-                        if blob:
-                            counts = np.bincount(
-                                np.frombuffer(blob, dtype=np.uint8),
-                                minlength=256)
-                            sampled_bytes = int(counts.sum())
-                            top_cnt = int(counts.max())
-                            words = _bitmap_to_longs(counts > 0)
-                rows.append((c, n, changes, sampled_bytes, top_cnt, *words))
-            yield pd.DataFrame(rows, columns=[f.name for f in _BATCH_SCHEMA])
+                lens = pc.binary_length(arr) if pa.types.is_binary(arr.type) \
+                    else pc.utf8_length(arr)
+                cnt[i, 2] += pc.sum(lens).as_py() or 0
+                data = _value_bytes(
+                    pc.drop_null(arr).slice(0, _VALUES_PER_BATCH_SAMPLE))
+                if len(data):
+                    counts = np.bincount(data, minlength=256)
+                    cnt[i, 3:] += counts.sum(), counts.max()
+                    used[i] |= np.packbits(counts > 0, bitorder="little")
+                if take:
+                    heads[i].append(arr.slice(0, take).cast(pa.binary()))
+        if not n:
+            return
+        out = {"n": [n], **{f: [zlib.compress(a.tobytes(), 1)] for f, a in
+                            (("cnt", cnt), ("hll", regs), ("used", used))}}
+        for i in range(k):
+            if is_bytes[i]:  # rows up to the one that crosses the byte cap
+                vals = pa.concat_arrays(heads[i] or [pa.array([], "binary")])
+                cum = np.cumsum(pc.fill_null(pc.binary_length(vals), 0))
+                vals = vals.slice(0, 1 + int(np.searchsorted(
+                    cum, SAMPLE_BLOB_BYTES)))
+                out[f"{i}_head"] = pa.ListArray.from_arrays([0, len(vals)],
+                                                            vals)
+            elif not ordered[i]:
+                continue
+            elif ext[i]:
+                for m, agg in (("min", pc.min), ("max", pc.max)):
+                    out[f"{i}_{m}"] = [agg(pa.array([e[m] for e in ext[i]]))]
+            else:  # all null
+                out[f"{i}_min"] = out[f"{i}_max"] = pa.nulls(1, types[i])
+        yield pa.RecordBatch.from_pydict(out)
     return fn
-
-
-def byte_and_run_stats(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Distributed run-length + byte-usage stats, one output row per column."""
-    bytes_cols = {f.name for f in df.schema.fields
-                  if isinstance(f.dataType, _BYTES_TYPES) and f.name in columns}
-    partials = df.select(*columns).mapInPandas(
-        _batch_stats_fn(columns, bytes_cols), schema=_BATCH_SCHEMA)
-    return partials.groupBy("column").agg(
-        F.sum("n").alias("n"),
-        F.sum("changes").alias("changes"),
-        F.sum("sampled_bytes").alias("sampled_bytes"),
-        F.sum("top_byte_cnt").alias("top_byte_cnt"),
-        F.bit_or("b0").alias("b0"),
-        F.bit_or("b1").alias("b1"),
-        F.bit_or("b2").alias("b2"),
-        F.bit_or("b3").alias("b3"),
-    )
-
-
-def global_column_stats(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Built-in single-pass aggregate: per-column core stats.
-
-    Returns one row per column: rows, non_null, distinct_est, avg_len
-    (strings/binary; null otherwise), min/max rendered as strings.
-    """
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    for c in columns:
-        aggs.append(F.count(F.col(c)).alias(f"{c}__nonnull"))
-        aggs.append(F.approx_count_distinct(F.col(c)).alias(f"{c}__distinct"))
-        if isinstance(fields[c], _BYTES_TYPES):
-            aggs.append(F.avg(F.length(F.col(c))).alias(f"{c}__avg_len"))
-            aggs.append(F.lit(None).cast("string").alias(f"{c}__min"))
-            aggs.append(F.lit(None).cast("string").alias(f"{c}__max"))
-        else:
-            aggs.append(F.lit(None).cast("double").alias(f"{c}__avg_len"))
-            aggs.append(F.min(F.col(c)).cast("string").alias(f"{c}__min"))
-            aggs.append(F.max(F.col(c)).cast("string").alias(f"{c}__max"))
-    return df.agg(*aggs)
 
 
 def exact_column_stats(df: DataFrame, columns: list[str],
@@ -195,34 +234,23 @@ def exact_byte_histogram(df: DataFrame, columns: list[str]) -> DataFrame:
     byte of every non-null value. Per-batch numpy bincount partials
     summed by a groupBy — a sum of histograms is partition-independent,
     so unlike the sampled batch collector this IS deterministic."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for c in columns:
-                vals = pdf[c].dropna()
-                if not len(vals):
-                    continue
-                blob = b"".join(
-                    v.encode("utf-8", "surrogatepass")
-                    if isinstance(v, str) else bytes(v) for v in vals)
-                if blob:
-                    counts = np.bincount(
-                        np.frombuffer(blob, dtype=np.uint8), minlength=256)
-                    rows.extend((c, int(b), int(counts[b]))
-                                for b in np.flatnonzero(counts))
-            yield pd.DataFrame(rows, columns=["column", "byte", "cnt"])
-    return (df.select(*columns).mapInPandas(fn, _BYTE_HIST_SCHEMA)
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for i, c in enumerate(columns):
+                counts = np.bincount(_value_bytes(pc.drop_null(b.column(i))),
+                                     minlength=256)
+                nz = np.flatnonzero(counts)
+                if len(nz):
+                    yield pa.RecordBatch.from_pydict({
+                        "column": [c] * len(nz), "byte": nz.astype(np.int32),
+                        "cnt": counts[nz].astype(np.int64)})
+    return (df.select(*columns).mapInArrow(fn, _BYTE_HIST_SCHEMA)
             .groupBy("column", "byte").agg(F.sum("cnt").alias("cnt")))
 
 
-SAMPLE_BLOB_VALUES = 400      # values per bytes-column for the driver sample
-SAMPLE_BLOB_BYTES = 256 << 10  # cap per column
-
-
 def collect_stats(df: DataFrame, columns: list[str] | None = None,
-                  sample_fraction: float = 1.0, seed: int = 42,
-                  with_sample_blob: bool = True) -> dict:
-    """Run both collectors, merge into {column: stats_dict} on the driver.
+                  sample_fraction: float = 1.0, seed: int = 42) -> dict:
+    """Pass 1 in one Spark job → {column: stats_dict} (see module doc).
 
     stats_dict keys: rows, non_null, distinct, avg_len, min, max,
     avg_run, distinct_bytes, top_byte_frac, byte_bitmap (4 int64 words),
@@ -232,50 +260,62 @@ def collect_stats(df: DataFrame, columns: list[str] | None = None,
     """
     if columns is None:
         columns = [f.name for f in df.schema.fields]
-    cached = False
     if sample_fraction < 1.0:
-        # three collectors read the sample — cache it once instead of
-        # re-scanning (and re-sampling) the source per collector
-        df = df.sample(fraction=sample_fraction, seed=seed).cache()
-        cached = True
-    g = global_column_stats(df, columns).collect()[0].asDict()
+        df = df.sample(fraction=sample_fraction, seed=seed)
+    dtypes = dict((f.name, f.dataType) for f in df.schema.fields)
+    is_bytes = [isinstance(dtypes[c], _BYTES_TYPES) for c in columns]
+    # min/max for the other atomic columns (nested ones have no order)
+    ordered = [not b and isinstance(dtypes[c], T.AtomicType)
+               for b, c in zip(is_bytes, columns)]
+    fields = [T.StructField(f, T.LongType() if f == "n" else T.BinaryType())
+              for f in ("n", "cnt", "hll", "used")]
+    for i, c in enumerate(columns):
+        if is_bytes[i]:
+            fields.append(T.StructField(f"{i}_head",
+                                        T.ArrayType(T.BinaryType())))
+        elif ordered[i]:
+            fields += [T.StructField(f"{i}_{m}", dtypes[c])
+                       for m in ("min", "max")]
+    fn = _partial_fn(is_bytes, ordered, [
+        isinstance(dtypes[c], _NULL_RUNS_BREAK) for c in columns])
+    t = (df.select(*columns, *[F.xxhash64(c).alias(f"__h{i}")
+                               for i, c in enumerate(columns)])
+         .mapInArrow(fn, T.StructType(fields)).toArrow())
+
+    def stacked(name: str, dtype, width: int) -> np.ndarray:
+        blobs = map(zlib.decompress, t.column(name).to_pylist())
+        return np.frombuffer(b"".join(blobs), dtype).reshape(
+            t.num_rows, len(columns), width)
+
+    rows = pc.sum(t.column("n")).as_py() or 0
+    cnt = stacked("cnt", np.int64, 5).sum(axis=0)
+    regs = stacked("hll", np.uint8, 1 << _HLL_P).max(axis=0, initial=0)
+    used = np.bitwise_or.reduce(stacked("used", np.uint8, 32), axis=0)
     out: dict[str, dict] = {}
-    for c in columns:
-        out[c] = {
-            "rows": g["__rows"],
-            "non_null": g[f"{c}__nonnull"],
-            "distinct": g[f"{c}__distinct"],
-            "avg_len": g[f"{c}__avg_len"],
-            "min": g[f"{c}__min"],
-            "max": g[f"{c}__max"],
-        }
-    for r in byte_and_run_stats(df, columns).collect():
-        d = r.asDict()
-        c = d["column"]
-        out[c]["avg_run"] = d["n"] / max(1, d["changes"])
-        out[c]["byte_bitmap"] = [d["b0"], d["b1"], d["b2"], d["b3"]]
-        out[c]["distinct_bytes"] = longs_to_bitcount(out[c]["byte_bitmap"])
-        out[c]["top_byte_frac"] = (
-            d["top_byte_cnt"] / d["sampled_bytes"] if d["sampled_bytes"] else 0.0)
-    if with_sample_blob:
-        bytes_cols = [f.name for f in df.schema.fields
-                      if isinstance(f.dataType, _BYTES_TYPES)
-                      and f.name in columns]
-        if bytes_cols:
-            rows = df.select(*bytes_cols).limit(SAMPLE_BLOB_VALUES).collect()
-            for c in bytes_cols:
-                parts, total = [], 0
-                for r in rows:
-                    v = r[c]
-                    if v is None:
-                        continue
-                    b = v.encode("utf-8", "surrogatepass") \
-                        if isinstance(v, str) else bytes(v)
-                    parts.append(b)
-                    total += len(b)
-                    if total >= SAMPLE_BLOB_BYTES:
-                        break
-                out[c]["sample_blob"] = b"".join(parts)[:SAMPLE_BLOB_BYTES]
-    if cached:
-        df.unpersist()
+    for i, c in enumerate(columns):
+        nn, changes, total_len, sampled, top = (int(v) for v in cnt[i])
+        s = out[c] = {
+            "rows": rows, "non_null": nn, "distinct": _hll_estimate(regs[i]),
+            "avg_len": None, "min": None, "max": None,
+            "avg_run": rows / max(1, changes), "byte_bitmap": [0, 0, 0, 0],
+            "distinct_bytes": 0, "top_byte_frac": 0.0}
+        for m, agg in (("min", pc.min), ("max", pc.max)):
+            if ordered[i]:
+                v = agg(t.column(f"{i}_{m}"))
+                if pa.types.is_timestamp(v.type):  # the zone maps' naive form
+                    v = v.cast(pa.timestamp(v.type.unit))
+                s[m] = None if v.as_py() is None else str(v.as_py())
+        if not is_bytes[i]:
+            continue
+        s["avg_len"] = total_len / nn if nn else None
+        s["byte_bitmap"] = [int(w) for w in used[i].view(np.int64)]
+        s["distinct_bytes"] = int(np.unpackbits(used[i]).sum())
+        s["top_byte_frac"] = top / sampled if sampled else 0.0
+        # the first SAMPLE_BLOB_VALUES rows in partition order, as limit()
+        # takes them; a task cuts its head short only past the byte cap
+        head: list = []
+        for h in t.column(f"{i}_head").to_pylist():
+            head += h[:SAMPLE_BLOB_VALUES - len(head)]
+        s["sample_blob"] = b"".join(
+            v for v in head if v is not None)[:SAMPLE_BLOB_BYTES]
     return out

@@ -1,14 +1,16 @@
 """End-to-end encode pipeline (SURVEY §3.4): the engine's flagship plan.
 
     source DF
-      → pass 1: sampled column stats (stats.collect_stats)
+      → pass 1: sampled column stats, one mapInArrow job
+                     (stats.collect_stats)
       → driver codec decision (selector.choose_codecs)
       → deterministic chunk assignment pmod(xxhash64(key), n_chunks)
       → pass 2: groupBy(chunk).applyInArrow encode (codecs.*)
       → chunk store  (parquet, partitioned by chunk_id, dynamic overwrite)
       → manifest     (parquet append: per-(chunk,column) codec/bytes/
                       checksum/wall — lineage + metrics checkpoint)
-      → run metrics  (json per run)
+      → run metrics  (json per run, from an Observation on the manifest
+                      write: no read-back)
 
 Resumability: a chunk is *complete* when the manifest holds rows for all
 its columns. A restarted run recomputes only incomplete chunks; dynamic
@@ -37,13 +39,13 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.chunking import CHUNK_COL, with_chunk_id
-from ..operators.encode import (STORE_COL, decode_chunks, encode_chunks,
-                                verify_roundtrip)
+from ..operators.encode import (CHUNK_SCHEMA, STORE_COL, decode_chunks,
+                                encode_chunks, verify_roundtrip)
 from ..operators.selector import (build_codec_plan, choose_codecs,
                                   choose_sort_order)
 from ..operators.stats import collect_stats
@@ -100,6 +102,31 @@ def _meta_file(out_dir: str) -> str:
 def _read_meta(out_dir: str) -> dict:
     with open(_meta_file(out_dir)) as fh:
         return json.load(fh)
+
+
+def _write_manifest(rows: DataFrame, out_dir: str, run_id: str, key: str,
+                    plan: dict[str, dict]) -> dict:
+    """Append this run's manifest rows (payload-free) and return the run
+    metrics an Observation counted while writing them: chunks and rows
+    (the key column's rows), byte totals, and codec_fallbacks (rows whose
+    codec differs from the plan's, e.g. fsst → plain)."""
+    obs = Observation(f"run_{run_id}")
+    is_key = F.col("column") == key
+    planned = F.create_map(*[F.lit(v) for c, e in plan.items()
+                             for v in (c, e["codec"])])
+    (rows.select("chunk_id", "column", "codec", "n_rows", "raw_bytes",
+                 "enc_bytes", "checksum", "wall_ms", "min_val", "max_val")
+     .withColumn("run_id", F.lit(run_id))
+     .withColumn("status", F.lit("ok"))
+     .observe(obs,
+              F.count_if(is_key).alias("chunks"),
+              F.sum(F.when(is_key, F.col("n_rows"))).alias("rows"),
+              F.sum("raw_bytes").alias("raw_bytes"),
+              F.sum("enc_bytes").alias("enc_bytes"),
+              F.count_if(~F.col("codec").eqNullSafe(planned[F.col("column")]))
+              .alias("codec_fallbacks"))
+     .write.mode("append").parquet(_manifest_path(out_dir)))
+    return obs.get
 
 
 def completed_chunks(spark: SparkSession, out_dir: str,
@@ -274,7 +301,8 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
                     "wall_s": time.perf_counter() - t0,
                     "stats_s": round(stats_wall, 3),
                     "plan_source": plan_source,
-                    "encode_s": 0.0, "manifest_s": 0.0}
+                    "encode_s": 0.0, "codec_fallbacks": 0,
+                    "manifest_s": 0.0}
         todo_count = len(todo_rows)
         todo_limited = spark.createDataFrame(todo_rows, "chunk_id int")
         chunked = chunked.join(
@@ -297,16 +325,9 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
                              sort_cols=sort_order,
                              store_dir=_chunks_path(out_dir),
                              _todo_chunks=todo_count)
-        manifest = rows.select(
-            "chunk_id", "column", "codec", "n_rows", "raw_bytes",
-            "enc_bytes", "checksum", "wall_ms", "min_val", "max_val") \
-            .withColumn("run_id", F.lit(run_id)) \
-            .withColumn("status", F.lit("ok"))
-        manifest.write.mode("append").parquet(_manifest_path(out_dir))
+        agg = _write_manifest(rows, out_dir, run_id, key, plan)
         encode_wall = time.perf_counter() - t_encode
         t_manifest = time.perf_counter()
-        manifest = spark.read.parquet(_manifest_path(out_dir)) \
-            .filter(F.col("run_id") == run_id)
     else:
         chunks = encode_chunks(chunked.drop(CHUNK_COL), key, plan, n_chunks,
                                sort_cols=sort_order, _todo_chunks=todo_count)
@@ -321,23 +342,15 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
 
         # --- manifest append (lineage + metrics checkpoint, no payloads)
         t_manifest = time.perf_counter()
-        try:
-            written = spark.read.parquet(_chunks_path(out_dir))
-        except Exception:
-            # empty input → nothing was written; synthesize an empty store
-            from ..operators.encode import CHUNK_SCHEMA
-            written = spark.createDataFrame([], CHUNK_SCHEMA)
+        # schema given: an empty input writes no file to infer it from
+        written = spark.read.schema(CHUNK_SCHEMA) \
+            .parquet(_chunks_path(out_dir))
         if done_count:
             written = written.join(F.broadcast(done), "chunk_id", "left_anti")
         if todo_limited is not None:
             written = written.join(F.broadcast(todo_limited), "chunk_id",
                                    "left_semi")
-        manifest = written.select(
-            "chunk_id", "column", "codec", "n_rows", "raw_bytes", "enc_bytes",
-            "checksum", "wall_ms", "min_val", "max_val") \
-            .withColumn("run_id", F.lit(run_id)) \
-            .withColumn("status", F.lit("ok"))
-        manifest.write.mode("append").parquet(_manifest_path(out_dir))
+        agg = _write_manifest(written, out_dir, run_id, key, plan)
 
     # --- write invariant for the read path: the direct (pyarrow) writer
     # emits each chunk file in ONE write_table call over ~n_columns rows,
@@ -354,15 +367,10 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
     with open(_meta_file(out_dir), "w") as fh:
         json.dump(meta_j, fh, default=str)
 
-    # --- run metrics
-    agg = manifest.agg(
-        F.countDistinct("chunk_id").alias("chunks"),
-        F.sum(F.when(F.col("column") == key, F.col("n_rows")).otherwise(0)).alias("rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes")).collect()[0]
+    # --- run metrics, observed while the manifest was written
     metrics = {
         "run_id": run_id, "n_chunks": n_chunks,
-        "chunks_encoded": agg["chunks"] or 0,
+        "chunks_encoded": agg["chunks"],
         "chunks_skipped": done_count,
         "rows": int(agg["rows"] or 0),
         "raw_bytes": int(agg["raw_bytes"] or 0),
@@ -372,6 +380,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         "stats_s": round(stats_wall, 3),
         "plan_source": plan_source,
         "encode_s": round(encode_wall, 3),
+        "codec_fallbacks": agg["codec_fallbacks"],
         "manifest_s": round(time.perf_counter() - t_manifest, 3),
     }
     with open(os.path.join(out_dir, f"metrics_{run_id}.json"), "w") as fh:

@@ -1,3 +1,5 @@
+import uuid
+
 import pytest
 
 
@@ -12,3 +14,22 @@ def spark():
 def pages(spark):
     from json_to_parquet_spark.sources.webpages import synth_webpages
     return synth_webpages(spark, 2000, seed=42).cache()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(fn) → (fn(), number of Spark jobs fn started), counted
+    through a job group."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, "counted")
+        try:
+            out = fn()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run

@@ -192,3 +192,56 @@ def test_decode_via_read_encoded(spark, pages, tmp_path):
     decoded = pipeline.read_encoded(spark, out)
     assert decoded.count() == 2000
     assert fingerprint(decoded.orderBy("url")) == fingerprint(pages.orderBy("url"))
+
+
+def _manifest_metrics(spark, out, run_id, key):
+    """Run metrics recomputed from a manifest read-back."""
+    import json
+    man = spark.read.parquet(out + "/manifest") \
+        .filter(F.col("run_id") == run_id)
+    g = man.agg(F.countDistinct("chunk_id").alias("chunks_encoded"),
+                F.sum(F.when(F.col("column") == key, F.col("n_rows")))
+                .alias("rows"),
+                F.sum("raw_bytes").alias("raw_bytes"),
+                F.sum("enc_bytes").alias("enc_bytes")).first().asDict()
+    with open(out + "/table_meta.json") as fh:
+        codecs = json.load(fh)["codecs"]
+    g["codec_fallbacks"] = sum(r.codec != codecs[r.column] for r in
+                               man.select("column", "codec").collect())
+    return g
+
+
+def test_run_metrics_match_manifest(spark, pages, tmp_path):
+    """The observed run metrics equal a manifest read-back on a fresh
+    run, a partial run and its resume, and a JVM-writer run. warc_ts is
+    forced to fsst, which the integer lane downgrades: one codec
+    fallback per chunk."""
+    codecs = {"url": "plain", "warc_ts": "fsst", "html": "plain",
+              "text": "fsst", "lang": "dict"}
+    runs = []
+    for name, kw in (("fresh", {}), ("partial", {"max_chunks_this_run": 2}),
+                     ("partial", {}), ("jvm", {"direct_store": False})):
+        out = str(tmp_path / name)
+        runs.append((out, pipeline.run_encode(
+            spark, pages, out, n_chunks=5, codecs=codecs, **kw)))
+    assert [m["chunks_encoded"] for _, m in runs] == [5, 2, 3, 5]
+    for out, m in runs:
+        expect = _manifest_metrics(spark, out, m["run_id"], "url")
+        assert {k: m[k] for k in expect} == expect
+        assert m["codec_fallbacks"] == m["chunks_encoded"]
+
+
+def test_fresh_encode_job_budget(spark, tmp_path, count_jobs):
+    """A fresh run_encode of a JSON source: row count, pass 1 (one job),
+    the encode and the manifest write. A further collector or read-back
+    would break this budget."""
+    from json_to_parquet_spark.sources import ingest
+    p = tmp_path / "docs.json"
+    p.write_text("".join(
+        f'{{"id": {i}, "kind": "k{i % 3}", "score": {i * 0.5}, '
+        f'"body": "text {i} of the fixture"}}\n' for i in range(300)))
+    src = ingest.ingest_json(spark, str(p))
+    m, jobs = count_jobs(lambda: pipeline.run_encode(
+        spark, src, str(tmp_path / "enc"), key="id", n_chunks=4))
+    assert m["rows"] == 300 and m["chunks_encoded"] == 4
+    assert jobs <= 6, jobs

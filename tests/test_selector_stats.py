@@ -4,6 +4,7 @@ shared-FSST collision fallback, and reference-parity ingest semantics."""
 import numpy as np
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from json_to_parquet_spark.functions.codecs import fsst
@@ -46,6 +47,74 @@ def test_collect_stats_values(spark):
     assert stats["s"]["distinct_bytes"] == 1
     assert stats["s"]["sample_blob"].startswith(b"xxxx")
     assert stats["a"]["min"] == "0" and stats["a"]["max"] == "99"
+
+
+def test_collect_stats_is_one_job(spark, count_jobs):
+    df = spark.range(0, 5000, 1, 4).selectExpr(
+        "id", "cast(id % 7 as string) as s",
+        "cast(cast(id as string) as binary) as b")
+    for fraction in (1.0, 0.5):
+        _, jobs = count_jobs(
+            lambda: collect_stats(df, sample_fraction=fraction))
+        assert jobs == 1, fraction
+
+
+def test_collect_stats_distinct_estimates(spark):
+    """Counts are exact; HyperLogLog distinct estimates are within
+    max(2, 2%) of countDistinct, also with -0.0, NaN and nulls."""
+    i = F.col("id")
+    df = spark.range(0, 100_000, 1, 4).select(
+        (i % 50_000).alias("big"),
+        F.concat(F.lit("v"), (i % 20_000).cast("string")).alias("s"),
+        F.when(i % 10 == 0, None).when(i % 10 == 1, F.lit(-0.0))
+        .when(i % 10 == 2, F.lit(float("nan"))).when(i % 10 == 3, F.lit(0.0))
+        .otherwise((i % 500) / 7.0).alias("d"),
+        (i % 3).alias("three"))
+    stats = collect_stats(df)
+    exact = df.agg(*[F.count(c).alias(f"{c}_nn") for c in df.columns],
+                   *[F.countDistinct(c).alias(c) for c in df.columns]).first()
+    for c in df.columns:
+        assert stats[c]["rows"] == 100_000
+        assert stats[c]["non_null"] == exact[f"{c}_nn"]
+        err = abs(stats[c]["distinct"] - exact[c])
+        assert err <= max(2, 0.02 * exact[c]), (c, stats[c]["distinct"])
+
+
+def test_collect_stats_empty_and_all_null(spark):
+    empty = spark.createDataFrame(
+        [], "a long, s string, b binary, t timestamp")
+    stats = collect_stats(empty)
+    assert all(s["rows"] == 0 and s["distinct"] == 0 for s in stats.values())
+    assert stats["s"]["sample_blob"] == b"" and stats["a"]["min"] is None
+    nulls = spark.range(0, 50).select(
+        "id", F.lit(None).cast("string").alias("s"),
+        F.lit(None).cast("double").alias("d"))
+    stats = collect_stats(nulls)
+    for c in ("s", "d"):
+        assert stats[c]["non_null"] == 0 and stats[c]["distinct"] == 0
+    assert stats["s"]["avg_len"] is None and stats["d"]["max"] is None
+    assert stats["id"]["min"] == "0" and stats["id"]["max"] == "49"
+
+
+def test_collect_stats_sample_blob_matches_limit(spark):
+    """The blob is the first 400 sampled rows in partition order, as
+    df.sample().limit(400) returns them, cut at SAMPLE_BLOB_BYTES; here
+    it spans partitions and one column hits the byte cap."""
+    from json_to_parquet_spark.operators.stats import SAMPLE_BLOB_BYTES
+    i = F.col("id")
+    df = spark.range(0, 1600, 1, 8).select(
+        i, F.when(i % 5 == 0, None)
+        .otherwise(F.concat(F.lit("page-"), i.cast("string"))).alias("s"),
+        F.expr("cast(repeat(cast(id as string), 300) as binary)").alias("big"))
+    f, seed = 0.5, 42
+    stats = collect_stats(df, sample_fraction=f, seed=seed)
+    rows = df.sample(fraction=f, seed=seed).select("s", "big") \
+        .limit(400).collect()
+    for c in ("s", "big"):
+        ref = b"".join(v.encode() if isinstance(v, str) else bytes(v)
+                       for v in (r[c] for r in rows) if v is not None)
+        assert stats[c]["sample_blob"] == ref[:SAMPLE_BLOB_BYTES], c
+    assert len(stats["big"]["sample_blob"]) == SAMPLE_BLOB_BYTES
 
 
 def test_codec_plan_builds_shared_fsst(spark):
