@@ -318,10 +318,10 @@ def decode_chunks(chunks: DataFrame, schema: T.StructType,
                   shuffle: bool = False) -> DataFrame:
     """Inverse of encode_chunks: encoded chunk rows → original-schema rows.
 
-    `columns` selects a subset to decode — the untouched columns' payloads
-    are never read (the filter on `column` pushes down to the chunk-store
-    parquet scan), the columnar payoff of the format. A chunk is keyed by
-    chunk_id, or by (STORE_COL, chunk_id) when `chunks` has that column.
+    `columns` selects a subset to decode — the untouched columns' rows are
+    dropped in the JVM, so their payloads never reach Python, the columnar
+    payoff of the format. A chunk is keyed by chunk_id, or by
+    (STORE_COL, chunk_id) when `chunks` has that column.
 
     Default is the SHUFFLE-FREE path: `mapInArrow` over the scan, grouping
     rows by chunk within each task. Both producers of chunk rows keep
@@ -335,7 +335,13 @@ def decode_chunks(chunks: DataFrame, schema: T.StructType,
     if columns is not None:
         schema = T.StructType([f for f in schema.fields
                                if f.name in set(columns)])
-        chunks = chunks.filter(F.col("column").isin(list(columns)))
+        # not pushed into the Parquet scan (coalesce has no source-filter
+        # form): a chunk file holds every column's rows in one row group,
+        # written without statistics or dictionaries, so the pushed
+        # predicate could never skip data but would still set up Parquet's
+        # row-group and page-index filtering for every file
+        chunks = chunks.filter(F.coalesce(
+            F.col("column").isin(list(columns)), F.lit(False)))
     tz = chunks.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
     aschema = arrow_schema_for(schema, tz=tz)
     key = [c for c in (STORE_COL, "chunk_id") if c in chunks.columns]

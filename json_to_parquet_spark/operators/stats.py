@@ -1,9 +1,10 @@
 """Pass-1 column statistics (SURVEY §2C row 1).
 
-`collect_stats` reads the (sampled) input in ONE Spark job, with no
-shuffle and no pandas: a `mapInArrow` over
+`collect_stats` reads the (sampled) input in ONE Spark job with no
+shuffle and no pandas (up to `_DRIVER_PARTIALS` tasks; see below): a
+`mapInArrow` over
 `df.select(*cols, *[xxhash64(c) for c in cols])`. Each task folds its
-Arrow batches with Arrow compute and numpy into one partial row:
+Arrow batches with Arrow compute and numpy into one partial:
 
   - rows, non-null count, summed character length (string/binary);
   - typed min/max of the other columns;
@@ -12,19 +13,23 @@ Arrow batches with Arrow compute and numpy into one partial row:
     string/binary columns (the FSST signal);
   - HyperLogLog registers (p=12) over the JVM's xxhash64 of each
     non-null value (the distinct estimate);
-  - in the first 64 tasks, the first <=400 rows of each string/binary
-    column, capped at SAMPLE_BLOB_BYTES (the driver's sample blob for
-    shared codec state).
+  - the task's first <=400 rows of each string/binary column, tagged
+    with its partition id and cut after the row that crosses
+    SAMPLE_BLOB_BYTES (the driver's sample blob for shared codec state).
 
-The driver merges the partials (sums, register max, bitmap OR), renders
-min/max in the zone-map form `str(scalar.as_py())`, and joins the row
-heads in partition order, cut as `limit(400)` cuts rows. Pass 1 reads a
-sample (`sample_fraction`): codec choice needs distribution shape only.
+Partials merge in any order (sums, register max, bitmap OR, min/max of
+min/max), and row heads merge in partition order, cut as `limit(400)`
+cuts rows; so the driver folds the packed partials one at a time, and
+past `_DRIVER_PARTIALS` tasks a shuffle stage folds them to sqrt(tasks)
+first. Min/max are rendered in the zone-map form `str(scalar.as_py())`.
+Pass 1 reads a sample (`sample_fraction`): codec choice needs
+distribution shape only.
 """
 
 from __future__ import annotations
 
 import math
+import pickle
 import zlib
 from collections.abc import Iterator
 
@@ -46,10 +51,11 @@ _NULL_RUNS_BREAK = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
 _VALUES_PER_BATCH_SAMPLE = 256  # values whose bytes feed the byte histogram
 SAMPLE_BLOB_VALUES = 400      # rows per bytes-column for the driver sample
 SAMPLE_BLOB_BYTES = 256 << 10  # cap per column
-# only the first tasks ship their row heads, which bounds what the driver
-# takes in at any partition count; the blob is then exactly limit()'s
-# whenever these partitions hold SAMPLE_BLOB_VALUES sampled rows
-_HEAD_TASKS = 64
+# partials the driver folds itself; past this many tasks a shuffle stage
+# (a second job) folds them to sqrt(tasks) first. A packed partial is
+# 2-25 KB and folds in 0.3-2.5 ms (4-CPU VM, lineitem and web pages), so
+# here the driver's serial fold costs about what that extra job does
+_DRIVER_PARTIALS = 256
 _HLL_P = 12                   # 4096 registers, ~1.6% standard error
 _HLL_Q = 64 - _HLL_P
 
@@ -113,25 +119,83 @@ def _hll_estimate(reg: np.ndarray) -> int:
     return int(round(m * m / (2 * math.log(2)) / (z + m * s)))
 
 
+def _head(rows: list[tuple[int, bytes | None]]) -> list:
+    """(partition id, value) rows → those that can still be among the
+    first SAMPLE_BLOB_VALUES rows in partition order, up to the one that
+    crosses SAMPLE_BLOB_BYTES. Rows of any other partition only come
+    after those already counted here, so the cut is exact."""
+    rows = sorted(rows, key=lambda r: r[0])[:SAMPLE_BLOB_VALUES]  # stable
+    cum = np.cumsum([len(v or b"") for _, v in rows])
+    return rows[:1 + int(np.searchsorted(cum, SAMPLE_BLOB_BYTES))]
+
+
+def _extremes(arrs: list[pa.Array]) -> pa.Array:
+    """[min, max] over `arrs` as a two-value array of their type."""
+    mm = pc.min_max(pa.chunked_array(arrs))
+    return pa.array([mm["min"].as_py(), mm["max"].as_py()], arrs[0].type)
+
+
+def _merge(a: dict | None, b: dict) -> dict:
+    """Fold partial `b` into `a`: sums, register max, bitmap OR, min/max
+    and the row heads. Partials merge in any order."""
+    if a is None:
+        return b
+    a["n"] += b["n"]
+    a["cnt"] += b["cnt"]
+    np.maximum(a["hll"], b["hll"], out=a["hll"])
+    a["used"] |= b["used"]
+    for i, e in b["ext"].items():  # set in every partial that has rows
+        a["ext"][i] = _extremes([a["ext"][i], e])
+    for i, h in b["heads"].items():
+        a["heads"][i] = _head(a["heads"].get(i, []) + h)
+    return a
+
+
+def _zero(k: int) -> dict:
+    """The partial of no rows over k columns. Per column, cnt holds the
+    non-null count, value changes, summed length, histogram bytes and
+    top-byte count; used is the byte bitmap."""
+    return dict(n=0, cnt=np.zeros((k, 5), np.int64),
+                hll=np.zeros((k, 1 << _HLL_P), np.uint8),
+                used=np.zeros((k, 32), np.uint8), ext={}, heads={})
+
+
+def _pack(p: dict) -> bytes:
+    return zlib.compress(pickle.dumps(p), 1)  # sparse registers: mostly 0
+
+
+def _unpack(blob: bytes) -> dict:
+    return pickle.loads(zlib.decompress(blob))
+
+
+def _fold(blobs) -> dict | None:
+    """Packed partials (Arrow binary scalars) → one, folded one at a time."""
+    p = None
+    for blob in blobs:
+        p = _merge(p, _unpack(blob.as_py()))
+    return p
+
+
+def _fold_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body: a task's packed partials → one."""
+    p = _fold(blob for b in batches for blob in b.column(0))
+    if p is not None:
+        yield pa.RecordBatch.from_pydict({"p": [_pack(p)]})
+
+
 def _partial_fn(is_bytes: list[bool], ordered: list[bool],
                 null_runs: list[bool]):
-    """mapInArrow body: one partial row per task (see module doc). The
-    per-column counters, HLL registers and byte bitmaps travel as numpy
-    arrays, zlib-packed into one binary field each (a sparse sample
-    leaves most registers 0)."""
+    """mapInArrow body: one packed partial per task (see module doc)."""
     k = len(is_bytes)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        n, head_rows = 0, SAMPLE_BLOB_VALUES \
-            if TaskContext.get().partitionId() < _HEAD_TASKS else 0
-        cnt = np.zeros((k, 5), np.int64)  # non_null, changes, len, hb, top
-        regs = np.zeros((k, 1 << _HLL_P), np.uint8)
-        used = np.zeros((k, 32), np.uint8)
-        heads, ext = [[] for _ in range(k)], [[] for _ in range(k)]
+        pid = TaskContext.get().partitionId()
+        p = _zero(k)
+        cnt, regs, used, ext, heads = (p[f] for f in
+                                       ("cnt", "hll", "used", "ext", "heads"))
         for b in batches:
-            types = b.schema.types
-            take = max(0, min(b.num_rows, head_rows - n))
-            n += b.num_rows
+            take = max(0, min(b.num_rows, SAMPLE_BLOB_VALUES - p["n"]))
+            p["n"] += b.num_rows
             for i in range(k):
                 arr = b.column(i)
                 cnt[i, 0] += len(arr) - arr.null_count
@@ -141,8 +205,8 @@ def _partial_fn(is_bytes: list[bool], ordered: list[bool],
                     hashes = hashes[arr.is_valid().to_numpy(
                         zero_copy_only=False)]
                 _hll_update(regs[i], hashes)
-                if ordered[i] and len(arr) > arr.null_count:
-                    ext[i].append(pc.min_max(arr))
+                if ordered[i]:
+                    ext[i] = _extremes([arr, ext[i]] if i in ext else [arr])
                 if not is_bytes[i]:
                     continue
                 lens = pc.binary_length(arr) if pa.types.is_binary(arr.type) \
@@ -155,27 +219,11 @@ def _partial_fn(is_bytes: list[bool], ordered: list[bool],
                     cnt[i, 3:] += counts.sum(), counts.max()
                     used[i] |= np.packbits(counts > 0, bitorder="little")
                 if take:
-                    heads[i].append(arr.slice(0, take).cast(pa.binary()))
-        if not n:
-            return
-        out = {"n": [n], **{f: [zlib.compress(a.tobytes(), 1)] for f, a in
-                            (("cnt", cnt), ("hll", regs), ("used", used))}}
-        for i in range(k):
-            if is_bytes[i]:  # rows up to the one that crosses the byte cap
-                vals = pa.concat_arrays(heads[i] or [pa.array([], "binary")])
-                cum = np.cumsum(pc.fill_null(pc.binary_length(vals), 0))
-                vals = vals.slice(0, 1 + int(np.searchsorted(
-                    cum, SAMPLE_BLOB_BYTES)))
-                out[f"{i}_head"] = pa.ListArray.from_arrays([0, len(vals)],
-                                                            vals)
-            elif not ordered[i]:
-                continue
-            elif ext[i]:
-                for m, agg in (("min", pc.min), ("max", pc.max)):
-                    out[f"{i}_{m}"] = [agg(pa.array([e[m] for e in ext[i]]))]
-            else:  # all null
-                out[f"{i}_min"] = out[f"{i}_max"] = pa.nulls(1, types[i])
-        yield pa.RecordBatch.from_pydict(out)
+                    vals = arr.slice(0, take).cast(pa.binary()).to_pylist()
+                    heads[i] = _head(heads.get(i, []) +
+                                     [(pid, v) for v in vals])
+        if p["n"]:
+            yield pa.RecordBatch.from_pydict({"p": [_pack(p)]})
     return fn
 
 
@@ -250,7 +298,8 @@ def exact_byte_histogram(df: DataFrame, columns: list[str]) -> DataFrame:
 
 def collect_stats(df: DataFrame, columns: list[str] | None = None,
                   sample_fraction: float = 1.0, seed: int = 42) -> dict:
-    """Pass 1 in one Spark job → {column: stats_dict} (see module doc).
+    """Pass 1 in one Spark job (two past _DRIVER_PARTIALS tasks) →
+    {column: stats_dict} (see module doc).
 
     stats_dict keys: rows, non_null, distinct, avg_len, min, max,
     avg_run, distinct_bytes, top_byte_frac, byte_bitmap (4 int64 words),
@@ -267,55 +316,38 @@ def collect_stats(df: DataFrame, columns: list[str] | None = None,
     # min/max for the other atomic columns (nested ones have no order)
     ordered = [not b and isinstance(dtypes[c], T.AtomicType)
                for b, c in zip(is_bytes, columns)]
-    fields = [T.StructField(f, T.LongType() if f == "n" else T.BinaryType())
-              for f in ("n", "cnt", "hll", "used")]
-    for i, c in enumerate(columns):
-        if is_bytes[i]:
-            fields.append(T.StructField(f"{i}_head",
-                                        T.ArrayType(T.BinaryType())))
-        elif ordered[i]:
-            fields += [T.StructField(f"{i}_{m}", dtypes[c])
-                       for m in ("min", "max")]
     fn = _partial_fn(is_bytes, ordered, [
         isinstance(dtypes[c], _NULL_RUNS_BREAK) for c in columns])
-    t = (df.select(*columns, *[F.xxhash64(c).alias(f"__h{i}")
-                               for i, c in enumerate(columns)])
-         .mapInArrow(fn, T.StructType(fields)).toArrow())
-
-    def stacked(name: str, dtype, width: int) -> np.ndarray:
-        blobs = map(zlib.decompress, t.column(name).to_pylist())
-        return np.frombuffer(b"".join(blobs), dtype).reshape(
-            t.num_rows, len(columns), width)
-
-    rows = pc.sum(t.column("n")).as_py() or 0
-    cnt = stacked("cnt", np.int64, 5).sum(axis=0)
-    regs = stacked("hll", np.uint8, 1 << _HLL_P).max(axis=0, initial=0)
-    used = np.bitwise_or.reduce(stacked("used", np.uint8, 32), axis=0)
+    parts = df.select(*columns, *[F.xxhash64(c).alias(f"__h{i}")
+                                  for i, c in enumerate(columns)]
+                      ).mapInArrow(fn, "p binary")
+    tasks = parts.rdd.getNumPartitions()
+    if tasks > _DRIVER_PARTIALS:  # fold them to sqrt(tasks) in Spark first
+        parts = parts.repartition(math.isqrt(tasks - 1) + 1) \
+            .mapInArrow(_fold_task, "p binary")
+    p = _fold(parts.toArrow().column("p")) or _zero(len(columns))
+    rows = p["n"]
     out: dict[str, dict] = {}
     for i, c in enumerate(columns):
-        nn, changes, total_len, sampled, top = (int(v) for v in cnt[i])
+        nn, changes, total_len, sampled, top = (int(v) for v in p["cnt"][i])
         s = out[c] = {
-            "rows": rows, "non_null": nn, "distinct": _hll_estimate(regs[i]),
+            "rows": rows, "non_null": nn,
+            "distinct": _hll_estimate(p["hll"][i]),
             "avg_len": None, "min": None, "max": None,
             "avg_run": rows / max(1, changes), "byte_bitmap": [0, 0, 0, 0],
             "distinct_bytes": 0, "top_byte_frac": 0.0}
-        for m, agg in (("min", pc.min), ("max", pc.max)):
-            if ordered[i]:
-                v = agg(t.column(f"{i}_{m}"))
+        if i in p["ext"]:
+            for m, v in zip(("min", "max"), p["ext"][i]):
                 if pa.types.is_timestamp(v.type):  # the zone maps' naive form
                     v = v.cast(pa.timestamp(v.type.unit))
                 s[m] = None if v.as_py() is None else str(v.as_py())
         if not is_bytes[i]:
             continue
+        used = p["used"][i]
         s["avg_len"] = total_len / nn if nn else None
-        s["byte_bitmap"] = [int(w) for w in used[i].view(np.int64)]
-        s["distinct_bytes"] = int(np.unpackbits(used[i]).sum())
+        s["byte_bitmap"] = [int(w) for w in used.view(np.int64)]
+        s["distinct_bytes"] = int(np.unpackbits(used).sum())
         s["top_byte_frac"] = top / sampled if sampled else 0.0
-        # the first SAMPLE_BLOB_VALUES rows in partition order, as limit()
-        # takes them; a task cuts its head short only past the byte cap
-        head: list = []
-        for h in t.column(f"{i}_head").to_pylist():
-            head += h[:SAMPLE_BLOB_VALUES - len(head)]
-        s["sample_blob"] = b"".join(
-            v for v in head if v is not None)[:SAMPLE_BLOB_BYTES]
+        s["sample_blob"] = b"".join(v for _, v in p["heads"].get(i, [])
+                                    if v is not None)[:SAMPLE_BLOB_BYTES]
     return out

@@ -515,7 +515,9 @@ def read_encoded(spark: SparkSession, out_dir: str,
             excl = excl | F.coalesce(mx < F.lit(lo), F.lit(False))
         if hi is not None:
             excl = excl | F.coalesce(mn > F.lit(hi), F.lit(False))
-        pruned = m.filter(excl).select(STORE_COL, "chunk_id").distinct()
+        # no distinct(): a duplicate id (a chunk a resumed run re-encoded)
+        # changes nothing in an anti-join, and sparing it spares a shuffle
+        pruned = m.filter(excl).select(STORE_COL, "chunk_id")
         chunks = chunks.join(F.broadcast(pruned), [STORE_COL, "chunk_id"],
                              "left_anti")
         residual = F.lit(True)

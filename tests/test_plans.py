@@ -85,8 +85,14 @@ def test_decode_plan_shuffle_free(spark, tmp_path):
         assert "Exchange" not in plan and "Union" not in plan, plan
         assert plan.count("Scan parquet") == 1, plan
         assert decoded.count() == 800
+        # a projected read filters chunk rows by `column` above the scan:
+        # pushed into Parquet it could never skip data (one row group
+        # holds every column's rows) and only costs per-file filter setup
+        proj = plan_of(pipeline.read_encoded(spark, out, columns=["lang"]))
+        assert not any("column" in ln for ln in proj.splitlines()
+                       if "PushedFilters" in ln), proj
         # zone-map pruned read: exchanges may only touch the tiny manifest
-        # id set (the distinct beneath the BroadcastExchange) — never
+        # id set (beneath the BroadcastExchange) — never
         # payload rows, so every Exchange line must sit BELOW the
         # BroadcastExchange in the plan tree (the payload scan feeds
         # MapInArrow directly)

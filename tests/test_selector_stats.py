@@ -117,6 +117,45 @@ def test_collect_stats_sample_blob_matches_limit(spark):
     assert len(stats["big"]["sample_blob"]) == SAMPLE_BLOB_BYTES
 
 
+def test_collect_stats_many_partitions(spark):
+    """With many partitions the blob is still limit()'s (here its 400
+    rows span ~80 partitions), and the driver takes in one partial per
+    task only up to _DRIVER_PARTIALS tasks; past that a second job folds
+    them to sqrt(tasks) first."""
+    import math
+    import uuid
+
+    from json_to_parquet_spark.operators.stats import (SAMPLE_BLOB_BYTES,
+                                                       _DRIVER_PARTIALS)
+    sc, i = spark.sparkContext, F.col("id")
+    st = sc.statusTracker()
+    for parts in (100, _DRIVER_PARTIALS + 44):
+        df = spark.range(0, 10 * parts, 1, parts).select(
+            i, F.when(i % 5 == 0, None)
+            .otherwise(F.concat(F.lit("page-"), i.cast("string"))).alias("s"))
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, "counted")
+        try:
+            stats = collect_stats(df, sample_fraction=0.5, seed=3)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = st.getJobIdsForGroup(group)
+        last = max(s for j in jobs for s in st.getJobInfo(j).stageIds)
+        folded = parts > _DRIVER_PARTIALS
+        assert len(jobs) == 1 + folded, parts
+        assert st.getStageInfo(last).numTasks == \
+            (math.isqrt(parts - 1) + 1 if folded else parts)
+        sample = df.sample(fraction=0.5, seed=3)
+        exact = sample.agg(F.count("*").alias("n"), F.count("s").alias("nn"),
+                           F.countDistinct("id").alias("d")).first()
+        assert stats["s"]["rows"] == exact["n"]
+        assert stats["s"]["non_null"] == exact["nn"]
+        assert abs(stats["id"]["distinct"] - exact["d"]) <= 0.02 * exact["d"]
+        ref = b"".join(r["s"].encode() for r in sample.limit(400).collect()
+                       if r["s"] is not None)
+        assert stats["s"]["sample_blob"] == ref[:SAMPLE_BLOB_BYTES], parts
+
+
 def test_codec_plan_builds_shared_fsst(spark):
     df = spark.createDataFrame(
         [(i, "the quick brown fox " * 20) for i in range(500)],

@@ -83,6 +83,24 @@ def test_zone_map_keeps_chunks_missing_from_manifest(spark, tmp_path):
     assert got.count() == 4801  # nothing lost from manifest-less chunks
 
 
+def test_zone_map_duplicate_manifest_rows(spark, tmp_path):
+    """A chunk listed twice in the manifest (a resumed run re-encoded it)
+    is pruned or kept once: the read returns each row once."""
+    import shutil
+    df = spark.range(0, 6000).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
+        F.col("id").alias("v"))
+    out = str(tmp_path / "enc_dup")
+    pipeline.run_encode(spark, df, out, key="k", n_chunks=6)
+    m = spark.read.parquet(out + "/manifest")
+    m.unionByName(m).write.parquet(str(tmp_path / "m_dup"))
+    shutil.rmtree(out + "/manifest")
+    shutil.move(str(tmp_path / "m_dup"), out + "/manifest")
+    got = pipeline.read_encoded(spark, out, where=("v", 100, 199))
+    assert sorted(r.v for r in got.select("v").collect()) == \
+        list(range(100, 200))
+
+
 def test_zone_map_null_bounds_kept(spark, tmp_path):
     """Chunks whose min/max are NULL (e.g. all-null values in the chunk /
     min-max failure) must be kept: NULL bounds prove nothing."""
