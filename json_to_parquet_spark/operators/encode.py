@@ -102,9 +102,9 @@ _STORE_FILE = "part-00000.parquet"
 
 def _write_chunk_file(store_dir: str, chunk_id: int, table: pa.Table) -> None:
     """Persist one chunk's payload rows as
-    `store_dir/chunk_id=<id>/part-00000.parquet` — the exact layout
-    Spark's partitioned writer produces, so every reader (read_encoded,
-    manifest scans, resume) is unchanged.
+    `store_dir/chunk_id=<id>/part-00000.parquet` — the layout Spark's
+    partitioned writer produces, which older engine versions used, so
+    their stores read and resume the same way.
 
     Idempotent and crash-safe: the file is written to a dot-prefixed
     temp name at the store root (Spark's file index ignores `.`/`_`
@@ -200,13 +200,13 @@ def encode_chunks(df: DataFrame, key: str, codecs: dict,
     `sort_cols` is the chunk-local row permutation (key appended as the
     unique tiebreak; default = key only).
 
-    With `store_dir` set, each group WRITES its own chunk parquet file
-    (same `chunk_id=N/` layout as Spark's partitioned writer, atomic
+    With `store_dir` set (how run_encode writes a store), each group
+    WRITES its own chunk parquet file (`chunk_id=N/` layout, atomic
     rename, idempotent) and the returned DataFrame carries only the
-    payload-free manifest rows (MANIFEST_SCHEMA). This keeps the encoded
-    bytes out of the JVM entirely — the default path sends every payload
-    Arrow→JVM and through the JVM parquet writer, which re-serializes
-    bytes the JVM never needs to see (~50 TB of them at 100 TB).
+    payload-free manifest rows (MANIFEST_SCHEMA), so the encoded bytes
+    never enter the JVM (~50 TB of them at 100 TB). Without it the
+    payload rows themselves come back (CHUNK_SCHEMA), for in-memory
+    round trips.
 
     The explicit repartition pins the shuffle width to ~one chunk per
     task instead of `spark.sql.shuffle.partitions` (= cores): with the
@@ -272,8 +272,10 @@ def _decode_map_fn(schema: T.StructType, arrow_schema: pa.Schema):
     partition: the chunk store is one file per chunk (a chunk's handful of
     payload rows is one row group, and parquet splits only at row groups),
     and encode_chunks's output is grouped by chunk id. A chunk decodes
-    (and its buffers release) the moment its last column row is seen, so
-    peak memory is ~one chunk regardless of task size."""
+    (and its buffers release) the moment its last column row is seen, but
+    a task's chunk rows usually arrive in one Arrow batch (a few rows per
+    chunk, far below maxRecordsPerBatch), so peak memory is the task's
+    payloads plus one decoded chunk."""
     columns = [f.name for f in schema.fields]
     expected = frozenset(columns)
 
@@ -308,8 +310,11 @@ def _decode_map_fn(schema: T.StructType, arrow_schema: pa.Schema):
         if pending:
             raise RuntimeError(
                 f"chunks {sorted(pending)} are missing column rows within "
-                f"this task — straddled scan partitions (multi-row-group "
-                f"file? decode with shuffle=True) or absent from the store.")
+                "this task — straddled scan partitions (a chunk file with "
+                "several row groups?) or absent from the store. If the "
+                "store's files were rewritten, remove single_row_group "
+                "from its table_meta.json so reads take the shuffle "
+                "decode, or re-encode the store.")
     return fn
 
 

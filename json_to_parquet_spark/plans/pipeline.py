@@ -6,17 +6,19 @@
       → driver codec decision (selector.choose_codecs)
       → deterministic chunk assignment pmod(xxhash64(key), n_chunks)
       → pass 2: groupBy(chunk).applyInArrow encode (codecs.*)
-      → chunk store  (parquet, partitioned by chunk_id, dynamic overwrite)
+      → chunk store  (parquet, one file per chunk under chunk_id=N/,
+                      written by the encode workers themselves)
       → manifest     (parquet append: per-(chunk,column) codec/bytes/
                       checksum/wall — lineage + metrics checkpoint)
       → run metrics  (json per run, from an Observation on the manifest
                       write: no read-back)
 
 Resumability: a chunk is *complete* when the manifest holds rows for all
-its columns. A restarted run recomputes only incomplete chunks; dynamic
-partition overwrite replaces any half-written chunk directories from the
-crashed attempt, so the final chunk store is identical to a single-shot
-run (chunk payloads are deterministic — sorted by key within a chunk).
+its columns. A restarted run recomputes only incomplete chunks; each
+re-encoded chunk file atomically replaces whatever the crashed attempt
+left in its chunk_id=N/ directory, so the final chunk store is identical
+to a single-shot run (chunk payloads are deterministic — sorted by key
+within a chunk).
 
 Scale notes (the 100 TB design point):
   - chunk membership is a pure row function → no global coordination;
@@ -36,6 +38,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import time
 import uuid
 
@@ -44,8 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.chunking import CHUNK_COL, with_chunk_id
-from ..operators.encode import (CHUNK_SCHEMA, STORE_COL, decode_chunks,
-                                encode_chunks, verify_roundtrip)
+from ..operators.encode import (STORE_COL, decode_chunks, encode_chunks,
+                                verify_roundtrip)
 from ..operators.selector import (build_codec_plan, choose_codecs,
                                   choose_sort_order)
 from ..operators.stats import collect_stats
@@ -102,6 +105,20 @@ def _meta_file(out_dir: str) -> str:
 def _read_meta(out_dir: str) -> dict:
     with open(_meta_file(out_dir)) as fh:
         return json.load(fh)
+
+
+def _write_meta(out_dir: str, meta: dict) -> None:
+    """Replace table_meta.json atomically: write a dot-prefixed temp file
+    beside it, then os.replace it into place, so a write that fails
+    part-way leaves the previous meta (the pinned resume plan) readable."""
+    tmp = os.path.join(out_dir, ".table_meta.json.tmp")
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(meta, fh, default=str)
+        os.replace(tmp, _meta_file(out_dir))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def _write_manifest(rows: DataFrame, out_dir: str, run_id: str, key: str,
@@ -172,7 +189,6 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
                sample_rows: int = 1_000_000,
                target_chunk_bytes: int = 32 << 20, resume: bool = True,
                max_chunks_this_run: int | None = None,
-               direct_store: bool | None = None,
                store_is_shared: bool = False) -> dict:
     """Run (or resume) the encode pipeline. Returns run metrics.
 
@@ -181,30 +197,30 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
     any table size. `sample_fraction` overrides the derived fraction when
     set explicitly.
 
-    direct_store=True: chunk files are written by the encode workers
-    themselves (see operators.encode.encode_chunks store_dir) —
-    identical store layout, but encoded payloads never round-trip
-    through the JVM writer. Workers write `out_dir` with plain POSIX
-    I/O, so the path must be reachable from every executor: on a
-    multi-node master that means a shared mount, which only the caller
-    can attest (`store_is_shared=True`). Default (None) auto-enables it
-    exactly when that is provable — local/local-cluster masters (one
-    machine) or an explicit `store_is_shared` — and otherwise falls back
-    to the Spark partitioned-write path rather than silently scattering
-    chunk files across executor-local filesystems. Passing
-    direct_store=True on a multi-node master without `store_is_shared`
-    raises."""
+    Chunk files are written by the encode workers themselves (see
+    operators.encode.encode_chunks store_dir), so encoded payloads never
+    round-trip through the JVM. Workers and the driver write `out_dir`
+    with plain POSIX I/O, so it must be a local path that every executor
+    can reach: on a multi-node master that means a shared mount, which
+    only the caller can attest (`store_is_shared=True`). Without that
+    attestation a non-local master raises rather than scattering chunk
+    files across executor-local filesystems, and so does a URI `out_dir`
+    (hdfs://, s3a://, file://)."""
     t0 = time.perf_counter()
-    worker_local_fs = (spark.sparkContext.master or "").startswith("local")
-    if direct_store is None:
-        direct_store = worker_local_fs or store_is_shared
-    elif direct_store and not (worker_local_fs or store_is_shared):
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:/", out_dir):
         raise ValueError(
-            "direct_store=True on a non-local master: executors would "
-            "write chunk files to THEIR local filesystems and the store "
-            "would be silently incomplete. Pass store_is_shared=True if "
-            f"{out_dir!r} is on a mount every executor can reach, or use "
-            "direct_store=False for the Spark partitioned-write path.")
+            f"out_dir {out_dir!r} is a URI: the store is written with local "
+            "file I/O, which would create a local directory named after the "
+            "scheme. Use a local or mounted path; stores behind a "
+            "filesystem URI need the pyarrow.fs I/O seam (ROADMAP "
+            "direction 5).")
+    if not ((spark.sparkContext.master or "").startswith("local")
+            or store_is_shared):
+        raise ValueError(
+            "non-local master: executors would write chunk files to THEIR "
+            "local filesystems and the store would be silently incomplete. "
+            f"Put {out_dir!r} on a mount every executor can reach and pass "
+            "store_is_shared=True.")
     os.makedirs(out_dir, exist_ok=True)
     columns = [f.name for f in src.schema.fields]
 
@@ -218,7 +234,8 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         else:
             # fresh run over a used out_dir: stale chunk directories from
             # an older (possibly different-n_chunks) layout would survive
-            # dynamic partition overwrite and leak ghost rows into reads
+            # (a run rewrites only the chunks it encodes) and leak ghost
+            # rows into reads
             import shutil
             for sub in (_chunks_path(out_dir), _manifest_path(out_dir)):
                 shutil.rmtree(sub, ignore_errors=True)
@@ -258,16 +275,19 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             # balanced (at 100 TB the bytes term dominates anyway)
             n_chunks = max(1, 4 * spark.sparkContext.defaultParallelism,
                            math.ceil(est_bytes / target_chunk_bytes))
-        # persist table meta (schema + full codec-decision manifest)
-        with open(_meta_file(out_dir), "w") as fh:
-            json.dump({"schema": src.schema.json(), "key": key,
-                       "n_chunks": n_chunks, "codecs": codecs,
-                       "codec_plan": _plan_to_json(plan),
-                       "sort_order": sort_order,
-                       "stats": {c: {k: v for k, v in s.items()
-                                     if k != "sample_blob"}
-                                 for c, s in stats.items()}},
-                      fh, default=str)
+        # persist table meta (schema + full codec-decision manifest).
+        # single_row_group: the workers write each chunk file in ONE
+        # write_table call over ~n_columns rows, so no chunk can straddle
+        # scan partitions and read_encoded may take the shuffle-free
+        # decode. Written once: a resume never rewrites the meta.
+        _write_meta(out_dir, {
+            "schema": src.schema.json(), "key": key,
+            "n_chunks": n_chunks, "codecs": codecs,
+            "codec_plan": _plan_to_json(plan),
+            "sort_order": sort_order,
+            "stats": {c: {k: v for k, v in s.items() if k != "sample_blob"}
+                      for c, s in stats.items()},
+            "single_row_group": True})
 
     # --- resume: restrict to incomplete chunks via broadcast anti-join
     # (the done set can be millions of ids — never an isin literal list)
@@ -276,7 +296,6 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
     # chunks this run encodes: sizes the encode shuffle beyond the
     # perfect-salt range (see encode_chunks)
     todo_count = n_chunks - done_count
-    todo_limited = None
     chunked = with_chunk_id(src, key, n_chunks)
     if done_count:
         chunked = chunked.join(
@@ -290,82 +309,35 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
                                              "left_anti")
         todo_rows = (todo_limited.orderBy("chunk_id")
                      .limit(max_chunks_this_run).collect())
-        if not todo_rows:
-            # terminal iteration of an incremental driver loop: every chunk
-            # already complete → no-op (createDataFrame on an empty list
-            # would raise CANNOT_INFER_EMPTY_SCHEMA)
-            return {"run_id": None, "n_chunks": n_chunks,
-                    "chunks_encoded": 0, "chunks_skipped": done_count,
-                    "rows": 0, "raw_bytes": 0, "enc_bytes": 0,
-                    "codecs": codecs,
-                    "wall_s": time.perf_counter() - t0,
-                    "stats_s": round(stats_wall, 3),
-                    "plan_source": plan_source,
-                    "encode_s": 0.0, "codec_fallbacks": 0,
-                    "manifest_s": 0.0}
         todo_count = len(todo_rows)
-        todo_limited = spark.createDataFrame(todo_rows, "chunk_id int")
-        chunked = chunked.join(
-            F.broadcast(todo_limited.withColumnRenamed("chunk_id", CHUNK_COL)),
-            CHUNK_COL, "left_semi")
+        if todo_rows:  # createDataFrame([]): CANNOT_INFER_EMPTY_SCHEMA
+            todo_limited = spark.createDataFrame(todo_rows, "chunk_id int")
+            chunked = chunked.join(
+                F.broadcast(todo_limited.withColumnRenamed("chunk_id",
+                                                           CHUNK_COL)),
+                CHUNK_COL, "left_semi")
 
-    # --- pass 2: encode + persist chunk store
-    # encode_chunks re-derives the (identical) chunk id itself
+    # --- pass 2: encode + persist chunk store. Each Arrow group writes its
+    # own chunk file (atomic rename into the chunk_id=N layout) and only
+    # the payload-free manifest rows flow back through Spark — the JVM
+    # never re-serializes the encoded bytes. Writing the manifest IS the
+    # action that runs the encode job. No chunk left to encode (the
+    # terminal iteration of an incremental driver loop) is a no-op run.
+    run_id = None
+    agg = dict.fromkeys(("chunks", "rows", "raw_bytes", "enc_bytes",
+                         "codec_fallbacks"), 0)
     t_encode = time.perf_counter()
-    run_id = uuid.uuid4().hex[:12]
-    if direct_store:
-        # direct store write: each Arrow group persists its own chunk
-        # file (atomic rename into the chunk_id=N layout) and only the
-        # payload-free manifest rows flow back through Spark — the JVM
-        # never re-serializes the encoded bytes (at 100 TB, ~50 TB that
-        # previously crossed Arrow→JVM→parquet-writer for nothing).
-        # Writing the manifest IS the action that runs the encode job.
+    if todo_count:
+        run_id = uuid.uuid4().hex[:12]
         os.makedirs(_chunks_path(out_dir), exist_ok=True)
+        # encode_chunks re-derives the (identical) chunk id itself
         rows = encode_chunks(chunked.drop(CHUNK_COL), key, plan, n_chunks,
                              sort_cols=sort_order,
                              store_dir=_chunks_path(out_dir),
                              _todo_chunks=todo_count)
         agg = _write_manifest(rows, out_dir, run_id, key, plan)
-        encode_wall = time.perf_counter() - t_encode
-        t_manifest = time.perf_counter()
-    else:
-        chunks = encode_chunks(chunked.drop(CHUNK_COL), key, plan, n_chunks,
-                               sort_cols=sort_order, _todo_chunks=todo_count)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # dynamic partition overwrite on chunk_id: a resumed run replaces
-        # only the chunk directories it re-encodes. Each chunk's rows sit
-        # in one task (grouped by chunk id), so the store is one file per
-        # chunk.
-        (chunks.write.mode("overwrite").partitionBy("chunk_id")
-               .parquet(_chunks_path(out_dir)))
-        encode_wall = time.perf_counter() - t_encode
-
-        # --- manifest append (lineage + metrics checkpoint, no payloads)
-        t_manifest = time.perf_counter()
-        # schema given: an empty input writes no file to infer it from
-        written = spark.read.schema(CHUNK_SCHEMA) \
-            .parquet(_chunks_path(out_dir))
-        if done_count:
-            written = written.join(F.broadcast(done), "chunk_id", "left_anti")
-        if todo_limited is not None:
-            written = written.join(F.broadcast(todo_limited), "chunk_id",
-                                   "left_semi")
-        agg = _write_manifest(written, out_dir, run_id, key, plan)
-
-    # --- write invariant for the read path: the direct (pyarrow) writer
-    # emits each chunk file in ONE write_table call over ~n_columns rows,
-    # so it can never produce a second row group; recording that lets
-    # read_encoded skip its driver-side multi-row-group probe (a serial
-    # stat pass over ~3M files at 100 TB). The JVM partitioned writer
-    # flushes by parquet.block.size and CAN split a >128 MB chunk, so the
-    # flag is only true while every run over this store was direct.
-    # Mutating chunk files in place without updating the meta is out of
-    # contract (manifest checksums already catch it).
-    meta_j = _read_meta(out_dir)
-    meta_j["single_row_group"] = bool(direct_store) and \
-        meta_j.get("single_row_group", True)
-    with open(_meta_file(out_dir), "w") as fh:
-        json.dump(meta_j, fh, default=str)
+    encode_wall = time.perf_counter() - t_encode
+    t_manifest = time.perf_counter()
 
     # --- run metrics, observed while the manifest was written
     metrics = {
@@ -383,8 +355,9 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         "codec_fallbacks": agg["codec_fallbacks"],
         "manifest_s": round(time.perf_counter() - t_manifest, 3),
     }
-    with open(os.path.join(out_dir, f"metrics_{run_id}.json"), "w") as fh:
-        json.dump(metrics, fh)
+    if run_id is not None:
+        with open(os.path.join(out_dir, f"metrics_{run_id}.json"), "w") as fh:
+            json.dump(metrics, fh)
     return metrics
 
 
@@ -397,53 +370,9 @@ def _batch_dirs(out_dir: str) -> list[str]:
             if os.path.exists(_meta_file(os.path.join(root, d)))]
 
 
-def _parse_byte_conf(s: str) -> int:
-    """Spark size-conf string ('128MB', '4194304b', '1g') → bytes."""
-    t = s.strip().lower()
-    for suf, mult in (("pb", 1 << 50), ("tb", 1 << 40), ("gb", 1 << 30),
-                      ("mb", 1 << 20), ("kb", 1 << 10), ("p", 1 << 50),
-                      ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20),
-                      ("k", 1 << 10), ("b", 1)):
-        if t.endswith(suf):
-            return int(float(t[: -len(suf)])) * mult
-    return int(t)
-
-
-def _store_needs_shuffle_decode(spark: SparkSession, chunks_dir: str) -> bool:
-    """True when some chunk file could have its rows SPLIT across scan
-    partitions — the one shape the zero-shuffle mapInArrow decode cannot
-    group in-task. Spark splits a parquet file only when its size exceeds
-    maxSplitBytes >= min(maxPartitionBytes, openCostInBytes), and a split
-    file straddles only if it holds >1 row group (row groups map whole to
-    the slice containing their midpoint). The engine's own writers emit
-    one row group per chunk file, so this scan normally finds nothing —
-    it exists for foreign/rewritten stores and for JVM-written stores
-    whose chunks outgrew parquet.block.size. Driver-side footer reads are
-    limited to files above the split threshold, with early exit."""
-    import pyarrow.parquet as pq
-    thresh = min(
-        _parse_byte_conf(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                        "128MB")),
-        _parse_byte_conf(spark.conf.get("spark.sql.files.openCostInBytes",
-                                        "4MB")))
-    for root, _, files in os.walk(chunks_dir):
-        for f in files:
-            if f.startswith((".", "_")) or not f.endswith(".parquet"):
-                continue
-            p = os.path.join(root, f)
-            try:
-                if (os.path.getsize(p) > thresh
-                        and pq.ParquetFile(p).metadata.num_row_groups > 1):
-                    return True
-            except OSError:
-                continue
-    return False
-
-
 def read_encoded(spark: SparkSession, out_dir: str,
                  columns: list[str] | None = None,
-                 where: tuple | None = None,
-                 shuffle: bool | None = None) -> DataFrame:
+                 where: tuple | None = None) -> DataFrame:
     """Decode the chunk store back to a DataFrame. A streaming store
     (per-batch sub-stores under out_dir/batches/, one schema) is read like
     a single store: one scan, chunks keyed by (sub-store, chunk_id).
@@ -456,12 +385,12 @@ def read_encoded(spark: SparkSession, out_dir: str,
     decode. Pruning is conservative: chunks with NULL bounds (binary
     columns, min/max failures) and chunks missing from the manifest
     (crash window between store write and manifest append) are KEPT.
-    shuffle — None (default) auto-detects whether any chunk file could
-    straddle scan partitions (splittable multi-row-group file) and falls
-    back to the shuffle decode for the whole read instead of failing
-    mid-job; False skips the detection walk (caller asserts a
-    one-row-group-per-file store — the engine's own writers guarantee
-    it); True forces the shuffle path."""
+
+    The decode is chosen from the metas alone: the shuffle-free map decode
+    when every sub-store records `single_row_group` (each chunk file is
+    one row group, so a chunk never straddles scan partitions), and the
+    shuffle decode otherwise — stores written before the flag existed or
+    by the retired JVM partitioned writer, whose files could split."""
     stores = _batch_dirs(out_dir) or [out_dir]
     metas = [_read_meta(d) for d in stores]
     for d, meta in zip(stores, metas):
@@ -469,14 +398,6 @@ def read_encoded(spark: SparkSession, out_dir: str,
             raise ValueError(f"sub-store {d} has a different schema from "
                              f"{stores[0]}; read them as separate stores")
     schema = T.StructType.fromJson(json.loads(metas[0]["schema"]))
-    if shuffle is None:
-        # stores written entirely by the direct (pyarrow) writer record
-        # the one-row-group-per-file invariant at encode time — trust it
-        # and skip the per-file footer probe (serial stat pass over ~3M
-        # files at 100 TB); otherwise detect
-        shuffle = any(not m.get("single_row_group") and
-                      _store_needs_shuffle_decode(spark, _chunks_path(d))
-                      for d, m in zip(stores, metas))
     # partition discovery rejects several partitioned roots, so chunk_id
     # and the sub-store tag come from the path; the schema skips inference
     fp = F.col("_metadata.file_path")
@@ -527,7 +448,9 @@ def read_encoded(spark: SparkSession, out_dir: str,
             residual = residual & (F.col(col) <= F.lit(hi))
         if columns is not None and col not in columns:
             columns = list(columns) + [col]
-    out = decode_chunks(chunks, schema, columns=columns, shuffle=shuffle)
+    out = decode_chunks(chunks, schema, columns=columns,
+                        shuffle=not all(m.get("single_row_group")
+                                        for m in metas))
     if residual is not None:
         out = out.filter(residual)
     return out
@@ -564,8 +487,7 @@ def tighten_nullability(spark: SparkSession, out_dir: str) -> T.StructType:
         for f in schema.fields])
     meta["required"] = sorted(c for c, r in req.items() if r)
     meta["schema_tightened"] = tightened.json()
-    with open(_meta_file(out_dir), "w") as fh:
-        json.dump(meta, fh, default=str)
+    _write_meta(out_dir, meta)
     return tightened
 
 

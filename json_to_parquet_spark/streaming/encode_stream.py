@@ -8,9 +8,9 @@ ingest path for continuously-arriving web pages:
     → foreachBatch: run_encode(batch) into a PER-BATCH chunk store
       (out_dir/batches/<batch_id>). Chunk ids are url-hash based, so
       nearly every chunk id appears in every batch — encoding batches
-      into one shared store would make each batch's dynamic partition
-      overwrite replace the previous batches' chunk directories (only the
-      last batch would survive). Per-batch stores make replayed batches
+      into one shared store would make each batch's chunk file replace
+      the previous batches' file for the same chunk_id=N/ directory (only
+      the last batch would survive). Per-batch stores make replayed batches
       idempotent (same batch_id → same directory, wiped and re-encoded)
       while `plans.pipeline.read_encoded` reads all sub-stores in one
       scan; checkpointLocation makes the stream itself resumable.
@@ -37,8 +37,7 @@ WEBPAGE_SCHEMA = T.StructType([
     T.StructField("lang", T.StringType()),
 ])
 
-# table_meta.json fields a later micro-batch copies from the first one;
-# writer facts such as single_row_group stay per sub-store
+# table_meta.json fields a later micro-batch copies from the first one
 _PINNED_META = ("schema", "key", "n_chunks", "codecs", "codec_plan",
                 "sort_order")
 
@@ -53,16 +52,17 @@ def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
     the codec plan; every later batch reuses it: the plan fields of the
     oldest other sub-store's table_meta.json (schema, key, n_chunks,
     codecs, codec_plan, sort_order) are written into the batch's own
-    directory, and run_encode(resume=True) takes them instead of
-    re-sampling. `n_chunks` therefore applies to the first batch only. A
+    directory with `single_row_group` (the batch is written by the same
+    one-file-per-chunk writer), and run_encode(resume=True) takes them
+    instead of re-sampling. `n_chunks` therefore applies to the first batch only. A
     replayed batch wipes its own directory first, so a half-written
     attempt (stale meta, chunks or manifest) never survives. Returns the
     StreamingQuery."""
-    import json
     import os
     import shutil
 
-    from ..plans.pipeline import _batch_dirs, _meta_file, run_encode
+    from ..plans.pipeline import (_batch_dirs, _read_meta, _write_meta,
+                                  run_encode)
 
     reader = spark.readStream.format(fmt).schema(WEBPAGE_SCHEMA)
     stream = reader.load(src_dir)
@@ -75,11 +75,10 @@ def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
         pinned = _batch_dirs(out_dir)
         os.makedirs(batch_dir)
         if pinned:
-            with open(_meta_file(pinned[0])) as fh:
-                meta = json.load(fh)
-            with open(_meta_file(batch_dir), "w") as fh:
-                json.dump({k: meta[k] for k in _PINNED_META if k in meta},
-                          fh)
+            meta = _read_meta(pinned[0])
+            _write_meta(batch_dir, {
+                **{k: meta[k] for k in _PINNED_META if k in meta},
+                "single_row_group": True})
         run_encode(batch_df.sparkSession, batch_df, batch_dir,
                    n_chunks=n_chunks, resume=True, sample_fraction=0.5)
 

@@ -1,6 +1,15 @@
+import contextlib
+import io
 import uuid
 
 import pytest
+
+
+def plan_of(df, mode="formatted") -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode)
+    return buf.getvalue()
 
 
 @pytest.fixture(scope="session")

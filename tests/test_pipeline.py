@@ -109,6 +109,7 @@ def test_pipeline_resume_identical(spark, pages, tmp_path):
                              max_chunks_this_run=2)
     assert m3["chunks_encoded"] == 0 and m3["chunks_skipped"] == 6
     assert m3["run_id"] is None
+    assert list(m3) == list(m2)  # a no-op run reports the same metrics
 
     out_b = str(tmp_path / "oneshot")
     pipeline.run_encode(spark, pages, out_b, n_chunks=6)
@@ -213,22 +214,61 @@ def _manifest_metrics(spark, out, run_id, key):
 
 def test_run_metrics_match_manifest(spark, pages, tmp_path):
     """The observed run metrics equal a manifest read-back on a fresh
-    run, a partial run and its resume, and a JVM-writer run. warc_ts is
-    forced to fsst, which the integer lane downgrades: one codec
-    fallback per chunk."""
+    run, a partial run and its resume. warc_ts is forced to fsst, which
+    the integer lane downgrades: one codec fallback per chunk."""
     codecs = {"url": "plain", "warc_ts": "fsst", "html": "plain",
               "text": "fsst", "lang": "dict"}
     runs = []
     for name, kw in (("fresh", {}), ("partial", {"max_chunks_this_run": 2}),
-                     ("partial", {}), ("jvm", {"direct_store": False})):
+                     ("partial", {})):
         out = str(tmp_path / name)
         runs.append((out, pipeline.run_encode(
             spark, pages, out, n_chunks=5, codecs=codecs, **kw)))
-    assert [m["chunks_encoded"] for _, m in runs] == [5, 2, 3, 5]
+    assert [m["chunks_encoded"] for _, m in runs] == [5, 2, 3]
     for out, m in runs:
         expect = _manifest_metrics(spark, out, m["run_id"], "url")
         assert {k: m[k] for k in expect} == expect
         assert m["codec_fallbacks"] == m["chunks_encoded"]
+
+
+def test_table_meta_written_once(spark, pages, tmp_path, monkeypatch):
+    """A fresh run writes table_meta.json once, flag included; a resume
+    never touches it (a store first written without the flag keeps its
+    shuffle decode)."""
+    import os
+    out = str(tmp_path / "enc")
+    writes = []
+    write_meta = pipeline._write_meta
+    monkeypatch.setattr(pipeline, "_write_meta",
+                        lambda d, m: (writes.append(d), write_meta(d, m)))
+    pipeline.run_encode(spark, pages, out, n_chunks=4, max_chunks_this_run=2)
+    assert writes == [out]
+    assert pipeline._read_meta(out)["single_row_group"] is True
+    before = os.stat(out + "/table_meta.json")
+    m = pipeline.run_encode(spark, pages, out, n_chunks=4)
+    assert m["chunks_encoded"] == 2 and writes == [out]
+    after = os.stat(out + "/table_meta.json")
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino,
+                                                 before.st_mtime_ns)
+
+
+def test_meta_rewrite_failure_keeps_previous(tmp_path, monkeypatch):
+    """A table_meta.json rewrite that fails part-way leaves the previous
+    meta readable and no temp file behind."""
+    import json
+    import os
+    out = str(tmp_path)
+    pipeline._write_meta(out, {"n_chunks": 4})
+
+    def broken_dump(obj, fh, **kw):
+        fh.write('{"n_chunks": ')
+        raise OSError("disk full")
+    monkeypatch.setattr(json, "dump", broken_dump)
+    with pytest.raises(OSError, match="disk full"):
+        pipeline._write_meta(out, {"n_chunks": 8})
+    monkeypatch.undo()
+    assert pipeline._read_meta(out) == {"n_chunks": 4}
+    assert os.listdir(out) == ["table_meta.json"]
 
 
 def test_fresh_encode_job_budget(spark, tmp_path, count_jobs):

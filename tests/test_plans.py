@@ -2,19 +2,10 @@
 pruning, broadcast joins, whole-stage codegen, and shuffle counts —
 asserted on .explain output so regressions in plan shape fail CI."""
 
-import contextlib
-import io
-
 import pyspark.sql.functions as F
+from conftest import plan_of
 
 SF = "/root/testdata/sf0.01"
-
-
-def plan_of(df, mode="formatted") -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
 
 
 def test_filter_pushdown_and_pruning(spark):
@@ -110,7 +101,7 @@ def test_decode_plan_shuffle_free(spark, tmp_path):
 
 def test_decode_map_detects_straddled_chunk(spark):
     """A chunk whose column rows straddle scan partitions must FAIL with
-    instructions (shuffle=True), never decode wrongly."""
+    instructions, never decode wrongly."""
     import pytest
     from json_to_parquet_spark.operators.encode import (STORE_COL,
                                                         decode_chunks,
@@ -121,7 +112,7 @@ def test_decode_map_detects_straddled_chunk(spark):
     # repartition WITHOUT the chunk key: rows of one chunk now spread
     # over several partitions — the map-path decode must refuse
     straddled = chunks.repartition(6)
-    with pytest.raises(Exception, match="straddle|shuffle=True"):
+    with pytest.raises(Exception, match="straddle.*single_row_group"):
         decode_chunks(straddled, pages.schema).count()
     # with the sub-store tag present, the error names the sub-store too
     tagged = chunks.withColumn(STORE_COL, F.lit("sub-a")).repartition(6)
@@ -165,11 +156,13 @@ def test_embedding_neardup_single_scan(spark):
 
 
 def test_read_encoded_auto_fallback_multi_rowgroup(spark, tmp_path):
-    """A chunk store containing a splittable multi-row-group chunk file
-    (foreign writer / JVM block-size overflow) must decode correctly via
-    the auto-detected shuffle path instead of failing mid-read with
-    instructions; shuffle=False opts out of the detection walk and keeps
-    the zero-Exchange map path."""
+    """A store whose meta lacks the single-row-group flag (written before
+    the flag, or by the retired JVM writer) decodes through the shuffle
+    path, so even a split multi-row-group chunk file yields every row. A
+    flagged store keeps the zero-Exchange map plan."""
+    import json
+    import os
+
     import pyarrow.parquet as pq
 
     from json_to_parquet_spark.plans import pipeline
@@ -177,22 +170,18 @@ def test_read_encoded_auto_fallback_multi_rowgroup(spark, tmp_path):
     pages = synth_webpages(spark, 500, partitions=4)
     out = str(tmp_path / "store")
     pipeline.run_encode(spark, pages, out, n_chunks=3)
-    # the direct writer records its one-row-group-per-file invariant
-    import json
     with open(out + "/table_meta.json") as fh:
         meta = json.load(fh)
     assert meta["single_row_group"] is True
-    # rewrite one chunk file one-row-group-PER-ROW (foreign-writer shape);
-    # a foreign rewriter does not carry the engine's write invariant
+    # rewrite one chunk file one-row-group-PER-ROW (foreign-writer shape)
+    # and drop the flag, as in a store written before the flag existed
     f = out + "/chunks/chunk_id=1/part-00000.parquet"
     pq.write_table(pq.read_table(f), f, row_group_size=1,
                    compression="none")
+    assert pq.ParquetFile(f).metadata.num_row_groups > 1
     del meta["single_row_group"]
     with open(out + "/table_meta.json", "w") as fh:
         json.dump(meta, fh)
-    meta = pq.ParquetFile(f).metadata
-    assert meta.num_row_groups > 1
-    import os
     old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
     old_open = spark.conf.get("spark.sql.files.openCostInBytes")
     try:
@@ -201,11 +190,11 @@ def test_read_encoded_auto_fallback_multi_rowgroup(spark, tmp_path):
         spark.conf.set("spark.sql.files.openCostInBytes", "0")
         assert os.path.getsize(f) > 8192  # genuinely splittable
         decoded = pipeline.read_encoded(spark, out)
-        assert "Exchange" in plan_of(decoded, mode="simple")  # auto-shuffle
+        assert "Exchange" in plan_of(decoded, mode="simple")
         assert decoded.count() == 500
-        # explicit opt-out (caller asserts single-row-group store) keeps
-        # the zero-Exchange map plan
-        fast = pipeline.read_encoded(spark, out, shuffle=False)
+        with open(out + "/table_meta.json", "w") as fh:
+            json.dump(dict(meta, single_row_group=True), fh)
+        fast = pipeline.read_encoded(spark, out)
         assert "Exchange" not in plan_of(fast, mode="simple")
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)

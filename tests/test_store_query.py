@@ -3,6 +3,7 @@ zone-map chunk pruning (the columnar payoffs of the format)."""
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import plan_of
 
 from json_to_parquet_spark.plans import pipeline
 
@@ -236,10 +237,11 @@ def test_resume_ignores_non_ok_manifest_rows(spark, tmp_path):
 
 
 def test_direct_store_guard_non_local_master(spark, tmp_path):
-    """direct_store=True without a provably-shared store filesystem
-    (non-local master, no store_is_shared attestation) must raise instead
-    of silently scattering chunk files across executor-local disks
-    (ADVICE r3 medium)."""
+    """A non-local master without the store_is_shared attestation must
+    raise instead of silently scattering chunk files across
+    executor-local disks (ADVICE r3 medium)."""
+    import os
+
     import pytest as _pytest
 
     df = spark.range(0, 10).select(
@@ -251,15 +253,27 @@ def test_direct_store_guard_non_local_master(spark, tmp_path):
     class _FakeSpark:
         sparkContext = _FakeSC()
 
-    with _pytest.raises(ValueError, match="store_is_shared"):
-        pipeline.run_encode(_FakeSpark(), df, str(tmp_path / "x"),
-                            key="k", direct_store=True)
-    # attested shared mount on the same fake master resolves to the
-    # direct path without raising at the guard (local spark does the run)
+    with _pytest.raises(ValueError, match="store_is_shared=True"):
+        pipeline.run_encode(_FakeSpark(), df, str(tmp_path / "x"), key="k")
+    assert not os.path.exists(tmp_path / "x")
+    # an attested shared mount passes the guard (local spark does the run)
     m = pipeline.run_encode(spark, df, str(tmp_path / "y"), key="k",
-                            n_chunks=2, direct_store=True,
-                            store_is_shared=True)
+                            n_chunks=2, store_is_shared=True)
     assert m["chunks_encoded"] == 2
+
+
+@pytest.mark.parametrize("scheme", ["hdfs://nn:8020", "s3a://bucket",
+                                    "file://"])
+def test_uri_store_rejected(spark, tmp_path, monkeypatch, scheme):
+    """A URI out_dir raises before anything is written: local file I/O
+    would create a directory named after the scheme instead."""
+    import os
+    monkeypatch.chdir(tmp_path)
+    df = spark.range(0, 10).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"))
+    with pytest.raises(ValueError, match="pyarrow.fs"):
+        pipeline.run_encode(spark, df, f"{scheme}{tmp_path}/enc", key="k")
+    assert os.listdir(tmp_path) == []
 
 
 def _sub_stores(spark, parts, out, **kw):
@@ -295,7 +309,13 @@ def test_streaming_store_colliding_chunk_ids(spark, tmp_path):
         assert got.count() == 3000
         assert pipeline.verify_encoded(spark, _kv(spark, 0, 3000), out,
                                        mode="checksum")["ok"]
-        shuffled = pipeline.read_encoded(spark, out, shuffle=True)
+        # stores without the single-row-group flag take the shuffle decode
+        for d in pipeline._batch_dirs(out):
+            meta = pipeline._read_meta(d)
+            del meta["single_row_group"]
+            pipeline._write_meta(d, meta)
+        shuffled = pipeline.read_encoded(spark, out)
+        assert "FlatMapGroupsInArrow" in plan_of(shuffled)
         row = verify_roundtrip(_kv(spark, 0, 3000), shuffled, "k",
                                mode="checksum").collect()[0]
         assert row.rows == 3000 and row.key_missing == 0 and row.v_bad == 0

@@ -8,6 +8,7 @@ import subprocess
 import sys
 
 import pyspark.sql.functions as F
+from conftest import plan_of
 
 from json_to_parquet_spark.plans import pipeline
 from json_to_parquet_spark.streaming import (encode_stream,
@@ -164,9 +165,9 @@ def _meta_and_metrics(store):
 def test_streaming_encode_multi_batch(spark, tmp_path):
     """Two micro-batches must BOTH survive: chunk ids repeat across
     batches (url-hash pmod), so a shared store would let batch 2's
-    dynamic overwrite wipe batch 1's chunk dirs. Batch 2 pins batch 1's
-    codec plan (no pass 1), and a replay over its stale leftovers must
-    not trust them."""
+    chunk files replace batch 1's. Batch 2 pins batch 1's codec plan (no
+    pass 1) and its single-row-group flag, so the read needs no shuffle,
+    and a replay over its stale leftovers must not trust them."""
     from json_to_parquet_spark.sources.webpages import synth_webpages
     src = str(tmp_path / "in")
     all_pages = synth_webpages(spark, 2000, seed=11).cache()
@@ -200,7 +201,11 @@ def test_streaming_encode_multi_batch(spark, tmp_path):
     assert run1["stats_s"] == 0 and run1["plan_source"] == "table_meta"
     assert not os.path.exists(os.path.join(b1, "chunks", "chunk_id=99"))
 
+    assert meta1["single_row_group"] is True
     decoded = pipeline.read_encoded(spark, out)
+    # both sub-stores carry the flag: the shuffle-free decode
+    assert not [ln for ln in plan_of(decoded, mode="simple").splitlines()
+                if "Exchange" in ln and "BroadcastExchange" not in ln]
     assert decoded.count() == 2000
     assert decoded.select("url").distinct().count() == 2000
     assert pipeline.verify_encoded(spark, all_pages, out)["ok"]
