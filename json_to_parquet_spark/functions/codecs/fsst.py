@@ -47,6 +47,7 @@ codec selector then falls back to DICT/PLAIN.
 from __future__ import annotations
 
 import array
+import functools
 
 import numpy as np
 
@@ -336,11 +337,13 @@ def build_tables(data: bytes, free: list[int],
     return s1 + s2, c1 + c2
 
 
-def _symbol_levels(symbols: list[bytes], codes: list[int]) -> list[int]:
+@functools.lru_cache(maxsize=64)
+def _symbol_levels(symbols: tuple, codes: tuple) -> tuple[int, ...]:
     """Level of each symbol: 1 + max level of any code byte it contains
-    (1 for raw symbols). Returns [] if a symbol references a code
+    (1 for raw symbols). Returns () if a symbol references a code
     assigned at its own position or later (legacy/foreign table — caller
-    must fall back to ordered replace)."""
+    must fall back to ordered replace). Memoized per process: every chunk
+    of a column shares the plan's table, and this scan is quadratic."""
     code_level: dict[int, int] = {}
     levels: list[int] = []
     for i, (s, c) in enumerate(zip(symbols, codes)):
@@ -349,10 +352,10 @@ def _symbol_levels(symbols: list[bytes], codes: list[int]) -> list[int]:
             if b in code_level:
                 lv = max(lv, code_level[b] + 1)
             elif b in codes[i:] or b == c:
-                return []  # forward reference — not level-structured
+                return ()  # forward reference — not level-structured
         levels.append(lv)
         code_level[c] = lv
-    return levels
+    return tuple(levels)  # shared by every caller: immutable
 
 
 def apply_tables(data: bytes, symbols: list[bytes], codes: list[int]
@@ -362,7 +365,7 @@ def apply_tables(data: bytes, symbols: list[bytes], codes: list[int]
     in the level-1-encoded stream. Falls back to the ordered replace
     loop for tables that are not level-structured. Returns None when the
     result would not shrink."""
-    levels = _symbol_levels(symbols, codes)
+    levels = _symbol_levels(tuple(symbols), tuple(codes))
     if not levels or any(len(s) > 8 for s in symbols):
         # legacy/foreign table: not level-structured, or holds symbols
         # longer than the 8-byte match window (the vectorized matcher
@@ -445,7 +448,7 @@ def decode(compressed: bytes, symbols: list[bytes], codes: list[int]) -> bytes:
     replace."""
     if not symbols:
         return compressed
-    levels = _symbol_levels(symbols, codes)
+    levels = _symbol_levels(tuple(symbols), tuple(codes))
     if not levels:
         out = compressed
         for sym, code in zip(reversed(symbols), reversed(codes)):

@@ -98,8 +98,3 @@ def quality_score(col: Column) -> Column:
     return (F.lit(0.35) * alpha + F.lit(0.25) * F.least(stop, F.lit(1.0))
             + F.lit(0.2) * (F.lit(1.0) - F.least(punct * 5, F.lit(1.0)))
             + F.lit(0.2) * length_term)
-
-
-def rolling_hash(col: Column) -> Column:
-    """64-bit content hash (xxhash64) — cheap dedup/bucketing key."""
-    return F.xxhash64(col)

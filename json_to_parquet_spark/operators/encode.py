@@ -160,6 +160,10 @@ def _encode_group_fn(columns: list[str], codecs: dict,
                 try:  # zone map: per-chunk min/max for chunk pruning
                     mm = pc.min_max(arr)
                     vmin, vmax = str(mm["min"].as_py()), str(mm["max"].as_py())
+                    # min_max skips NaN, which Spark orders above any number
+                    if pa.types.is_floating(arr.type) and pc.any(
+                            pc.is_nan(arr)).as_py():
+                        vmax = "nan"
                 except Exception:
                     pass
             cols["chunk_id"].append(chunk_id)

@@ -24,10 +24,12 @@ Scale notes (the 100 TB design point):
   - chunk membership is a pure row function → no global coordination;
     the only shuffle is the hash partition by chunk id, sized by
     `target_chunk_bytes` so one chunk ≈ one comfortable Arrow group.
-  - completed-chunk filtering and zone-map pruning are broadcast
-    anti-joins against the (tiny) manifest — never a collected id list:
-    at 100 TB / 32 MB chunks there are ~3M chunk ids, and an `isin`
-    literal list of that size is a driver-side plan bomb.
+  - completed-chunk filtering is a broadcast anti-join against the
+    manifest — never a collected id list: at 100 TB / 32 MB chunks there
+    are ~3M chunk ids, and an `isin` literal list of that size is a
+    driver-side plan bomb. Zone-map pruning is file-level, on the
+    driver: pyarrow reads the manifest's bounds for one column and the
+    scan gets the surviving chunk_id=N directories (see read_encoded).
   - pass 1 samples a bounded NUMBER of rows (`sample_rows`, default 1M),
     not a fraction — codec choice needs distribution shape, and 25% of
     10^12 docs would be a 25 TB "sample".
@@ -35,12 +37,18 @@ Scale notes (the 100 TB design point):
 
 from __future__ import annotations
 
+import datetime
 import json
 import math
+import numbers
 import os
 import re
 import time
 import uuid
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -155,19 +163,11 @@ def completed_chunks(spark: SparkSession, out_dir: str,
     potentially millions of ids into an `isin` literal list. None when no
     manifest exists yet."""
     path = _manifest_path(out_dir)
-    # existence pre-check via the Hadoop FS API (works for any scheme the
-    # session can reach, not just local paths): a fresh run has no manifest,
-    # and letting DataFrameReader.parquet throw PATH_NOT_FOUND makes log4j
-    # print a full JVM stack trace to stderr on EVERY fresh encode — pure
-    # noise in batch logs. The except stays for the crash-resume corner
-    # where a killed run left a directory the reader can't infer from,
-    # and is the only check on sessions without a JVM handle (Spark
-    # Connect).
-    jvm, jsc = getattr(spark, "_jvm", None), getattr(spark, "_jsc", None)
-    if jvm is not None and jsc is not None:
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        if not hpath.getFileSystem(jsc.hadoopConfiguration()).exists(hpath):
-            return None
+    # a fresh run has no manifest: checking first spares the JVM stack
+    # trace a PATH_NOT_FOUND prints; the except covers a crashed run's
+    # directory the reader cannot infer a schema from
+    if not os.path.isdir(path):
+        return None
     try:
         m = spark.read.parquet(path)
     except Exception:
@@ -370,6 +370,82 @@ def _batch_dirs(out_dir: str) -> list[str]:
             if os.path.exists(_meta_file(os.path.join(root, d)))]
 
 
+# an explicit schema also reads manifest files that lack the bound
+# columns: their bounds are NULL and keep their chunks
+_BOUNDS_SCHEMA = pa.schema([("chunk_id", pa.int32()), ("column", pa.string()),
+                            ("min_val", pa.string()),
+                            ("max_val", pa.string())])
+
+
+def _bound_literal(dtype: T.DataType, v) -> tuple | None:
+    """(Arrow scalar, type the zone-map strings parse to) for range end
+    `v` on a `dtype` column, compared as the residual filter compares it;
+    None when no exact match is known (that end then prunes nothing)."""
+    num = isinstance(v, (float, numbers.Integral)) and not isinstance(v, bool)
+    if num and isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType,
+                                  T.ByteType)):
+        if isinstance(v, float):  # Spark widens the column to double
+            return pa.scalar(v), pa.int64()
+        if -(1 << 63) <= v < 1 << 63:  # int64, NOT double: > 2^53 rounds
+            return pa.scalar(v, pa.int64()), pa.int64()
+    elif num and isinstance(dtype, (T.DoubleType, T.FloatType)):
+        # an integral end meets a float column as float32: exact to 2^24
+        if (isinstance(dtype, T.DoubleType) or isinstance(v, float)
+                or abs(v) <= 1 << 24):
+            return pa.scalar(float(v)), pa.float64()
+    elif isinstance(dtype, T.StringType) and isinstance(v, str):
+        return pa.scalar(v), pa.string()  # Arrow, like Spark: UTF-8 bytes
+    elif isinstance(dtype, T.DateType) and type(v) is datetime.date:
+        return pa.scalar(v), pa.date32()
+    elif (isinstance(dtype, T.TimestampType)
+          and isinstance(v, datetime.datetime)):
+        # bounds are naive UTC (the encoder's timestamps); the end is the
+        # instant PySpark's literal converter sends (naive = local time)
+        us = int(v.replace(microsecond=0).timestamp()) * 10**6 + v.microsecond
+        return pa.scalar(us, pa.timestamp("us")), pa.timestamp("us")
+    return None
+
+
+def _scan_paths(d: str, col: str, dtype: T.DataType, lo, hi) -> list[str]:
+    """What a range read of sub-store `d` scans: its chunks/ root, or,
+    when the zone maps exclude a chunk, each chunk_id=N directory they do
+    not exclude. One manifest row proves exclusion (a resume can leave
+    duplicates); NULL bounds, an end whose bounds do not all parse and a
+    missing manifest prove nothing. No Spark job: pyarrow reads one
+    column's manifest rows, compared vectorized, and the driver lists
+    chunks/ — at 3M chunks, 3M short strings and one listing, the order
+    of work of the file index Spark builds for any read of the store."""
+    root, mdir = _chunks_path(d), _manifest_path(d)
+    if not os.path.isdir(mdir):
+        return [root]
+    bounds = pq.read_table(mdir, schema=_BOUNDS_SCHEMA,
+                           filters=[("column", "==", col)])
+    excl = pa.nulls(len(bounds), pa.bool_())  # Kleene: NULL keeps a chunk
+    for name, v, beyond in (("max_val", lo, pc.less),
+                            ("min_val", hi, pc.greater)):
+        end = _bound_literal(dtype, v)
+        if end is None:
+            continue
+        lit, parse_t = end
+        try:
+            b = pc.cast(pc.cast(bounds[name], parse_t), lit.type, safe=False)
+        except pa.ArrowInvalid:  # a damaged bound proves nothing
+            continue
+        excl = pc.or_kleene(excl, beyond(b, lit))  # NaN compares false
+    excluded = set(bounds["chunk_id"].filter(excl).to_pylist())
+    if not excluded:
+        return [root]
+    keep = []
+    for name in sorted(os.listdir(root)):
+        m = re.fullmatch(r"chunk_id=(\d+)", name)
+        if m is None and name[0] not in "._":  # Spark's hidden prefixes
+            raise ValueError("chunk file outside chunk_id=N/: "
+                             + os.path.join(root, name))
+        if m is not None and int(m[1]) not in excluded:
+            keep.append(os.path.join(root, name))
+    return keep
+
+
 def read_encoded(spark: SparkSession, out_dir: str,
                  columns: list[str] | None = None,
                  where: tuple | None = None) -> DataFrame:
@@ -378,13 +454,10 @@ def read_encoded(spark: SparkSession, out_dir: str,
     a single store: one scan, chunks keyed by (sub-store, chunk_id).
 
     columns — decode only these columns (others' payloads never read).
-    where — (col, lo, hi) range predicate: chunks whose zone map
-    [min_val, max_val] PROVABLY cannot intersect [lo, hi] are pruned via
-    a broadcast anti-join on the manifest BEFORE any payload is touched
-    (lo/hi None = open-ended); the exact residual filter is applied after
-    decode. Pruning is conservative: chunks with NULL bounds (binary
-    columns, min/max failures) and chunks missing from the manifest
-    (crash window between store write and manifest append) are KEPT.
+    where — (col, lo, hi) range predicate (lo/hi None = open-ended): the
+    driver leaves each chunk whose manifest zone map PROVABLY misses
+    [lo, hi] out of the scan's paths, so its file is never read (see
+    _scan_paths); the exact residual filter is applied after decode.
 
     The decode is chosen from the metas alone: the shuffle-free map decode
     when every sub-store records `single_row_group` (each chunk file is
@@ -398,49 +471,13 @@ def read_encoded(spark: SparkSession, out_dir: str,
             raise ValueError(f"sub-store {d} has a different schema from "
                              f"{stores[0]}; read them as separate stores")
     schema = T.StructType.fromJson(json.loads(metas[0]["schema"]))
-    # partition discovery rejects several partitioned roots, so chunk_id
-    # and the sub-store tag come from the path; the schema skips inference
-    fp = F.col("_metadata.file_path")
-    cid = F.regexp_extract(fp, r"/chunk_id=(\d+)/[^/]*$", 1)
-    chunks = (spark.read.schema("column string, meta string, payload binary")
-              .option("recursiveFileLookup", "true")
-              .parquet(*[_chunks_path(d) for d in stores])
-              .withColumn(STORE_COL, F.regexp_extract(fp, "(.*)/chunks/", 1))
-              .withColumn("chunk_id", F.when(cid != "", cid.cast("int"))
-                          .otherwise(F.raise_error(F.concat(F.lit(
-                              "chunk file outside chunk_id=N/: "), fp)))))
+    paths = [_chunks_path(d) for d in stores]
     residual = None
     if where is not None:
         col, lo, hi = where
         dtype = dict((f.name, f.dataType) for f in schema.fields)[col]
-        if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType,
-                              T.ByteType)):
-            bound_t = "bigint"  # NOT double: int64 > 2^53 would round
-        elif isinstance(dtype, (T.DoubleType, T.FloatType)):
-            bound_t = "double"
-        else:
-            bound_t = None  # stringified bounds compare lexically
-        m = (spark.read.schema("chunk_id int, column string, min_val string,"
-                               " max_val string")
-             .option("recursiveFileLookup", "true")
-             .parquet(*[_manifest_path(d) for d in stores])
-             .filter(F.col("column") == col)
-             .withColumn(STORE_COL, F.regexp_extract(fp, "(.*)/manifest/", 1)))
-        # try_cast: a malformed bound under ANSI mode must degrade to
-        # NULL (→ chunk kept), never fail the whole read
-        mn, mx = (F.col(c).try_cast(bound_t) if bound_t else F.col(c)
-                  for c in ("min_val", "max_val"))
-        # provably-excluded predicate; NULL bounds → false → chunk kept
-        excl = F.lit(False)
-        if lo is not None:
-            excl = excl | F.coalesce(mx < F.lit(lo), F.lit(False))
-        if hi is not None:
-            excl = excl | F.coalesce(mn > F.lit(hi), F.lit(False))
-        # no distinct(): a duplicate id (a chunk a resumed run re-encoded)
-        # changes nothing in an anti-join, and sparing it spares a shuffle
-        pruned = m.filter(excl).select(STORE_COL, "chunk_id")
-        chunks = chunks.join(F.broadcast(pruned), [STORE_COL, "chunk_id"],
-                             "left_anti")
+        paths = [p for d in stores
+                 for p in _scan_paths(d, col, dtype, lo, hi)]
         residual = F.lit(True)
         if lo is not None:
             residual = residual & (F.col(col) >= F.lit(lo))
@@ -448,6 +485,17 @@ def read_encoded(spark: SparkSession, out_dir: str,
             residual = residual & (F.col(col) <= F.lit(hi))
         if columns is not None and col not in columns:
             columns = list(columns) + [col]
+    # partition discovery rejects several partitioned roots, so chunk_id
+    # and the sub-store tag come from the path; the schema skips inference
+    fp = F.col("_metadata.file_path")
+    cid = F.regexp_extract(fp, r"/chunk_id=(\d+)/[^/]*$", 1)
+    chunks = (spark.read.schema("column string, meta string, payload binary")
+              .option("recursiveFileLookup", "true")
+              .parquet(*paths)
+              .withColumn(STORE_COL, F.regexp_extract(fp, "(.*)/chunks/", 1))
+              .withColumn("chunk_id", F.when(cid != "", cid.cast("int"))
+                          .otherwise(F.raise_error(F.concat(F.lit(
+                              "chunk file outside chunk_id=N/: "), fp)))))
     out = decode_chunks(chunks, schema, columns=columns,
                         shuffle=not all(m.get("single_row_group")
                                         for m in metas))

@@ -81,6 +81,19 @@ def test_fsst_blob_roundtrip():
     assert fsst.decode(blob, symbols, codes) == text
 
 
+def test_fsst_levels_built_once_per_table():
+    """Chunks that share one symbol table (the plan's) derive its decode
+    levels once per process, not once per chunk."""
+    _, symbols, codes = fsst.encode(b"the quick brown fox. " * 300)
+    texts = (b"brown the quick fox. " * 200, b"fox. the brown quick " * 250)
+    chunks = [fsst.apply_tables(t, symbols, codes) for t in texts]
+    fsst._symbol_levels.cache_clear()
+    for enc, text in zip(chunks, texts):
+        assert fsst.decode(enc, list(symbols), list(codes)) == text
+    info = fsst._symbol_levels.cache_info()
+    assert (info.misses, info.hits) == (1, 1)
+
+
 def test_fsst_inapplicable_on_full_alphabet():
     data = bytes(range(256)) * 64
     assert fsst.encode(data) is None

@@ -70,6 +70,7 @@ def test_decode_plan_shuffle_free(spark, tmp_path):
         part = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == i)
         pipeline.run_encode(spark, part, f"{stream}/batches/{i:010d}",
                             n_chunks=3)
+    first = pages.agg(F.min("url")).first()[0]
     for out in (single, stream):
         decoded = pipeline.read_encoded(spark, out)
         plan = plan_of(decoded, mode="simple")
@@ -82,21 +83,17 @@ def test_decode_plan_shuffle_free(spark, tmp_path):
         proj = plan_of(pipeline.read_encoded(spark, out, columns=["lang"]))
         assert not any("column" in ln for ln in proj.splitlines()
                        if "PushedFilters" in ln), proj
-        # zone-map pruned read: exchanges may only touch the tiny manifest
-        # id set (beneath the BroadcastExchange) — never
-        # payload rows, so every Exchange line must sit BELOW the
-        # BroadcastExchange in the plan tree (the payload scan feeds
-        # MapInArrow directly)
-        pruned = pipeline.read_encoded(spark, out, columns=["lang"],
-                                       where=("lang", "aa", "zz"))
-        plan2 = plan_of(pruned, mode="simple")
-        assert "Union" not in plan2, plan2
-        lines = plan2.splitlines()
-        bcast_at = next(i for i, ln in enumerate(lines)
-                        if "BroadcastExchange" in ln)
-        for i, ln in enumerate(lines):
-            if "Exchange" in ln and "BroadcastExchange" not in ln:
-                assert i > bcast_at, plan2  # manifest-side subtree only
+        # zone-map pruned reads prune on the driver, from the manifest
+        # files: no broadcast of a manifest scan, no Exchange of any kind,
+        # and the one scan reads the surviving chunk files only. The
+        # second range keeps just the chunk(s) holding the smallest url.
+        for where in (("lang", "aa", "zz"), ("url", None, first)):
+            pruned = pipeline.read_encoded(spark, out, columns=["lang"],
+                                           where=where)
+            plan2 = plan_of(pruned, mode="simple")
+            assert "Exchange" not in plan2 and "Union" not in plan2, plan2
+            assert plan2.count("Scan parquet") == 1, plan2
+        assert len(pruned.inputFiles()) < len(decoded.inputFiles())
 
 
 def test_decode_map_detects_straddled_chunk(spark):

@@ -3,6 +3,7 @@ zone-map chunk pruning (the columnar payoffs of the format)."""
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import types as T
 from conftest import plan_of
 
 from json_to_parquet_spark.plans import pipeline
@@ -357,6 +358,183 @@ def test_streaming_store_prunes_per_sub_store(spark, tmp_path,
     assert read == kept
 
 
+def test_zone_map_read_without_manifest(spark, tmp_path):
+    """A store whose manifest/ is gone proves nothing: a range read keeps
+    every chunk and returns exactly the rows in range."""
+    import shutil
+    out = str(tmp_path / "enc")
+    pipeline.run_encode(spark, _kv(spark, 0, 3000), out, key="k",
+                        n_chunks=4)
+    shutil.rmtree(pipeline._manifest_path(out))
+    got = pipeline.read_encoded(spark, out, where=("v", 100, 199))
+    assert sorted(r.v for r in got.select("v").collect()) == \
+        list(range(100, 200))
+
+
+def test_zone_map_keeps_nan_rows(spark, tmp_path):
+    """Spark orders NaN above every number, so `f >= lo` keeps NaN rows:
+    a chunk holding NaN must not be pruned by its non-NaN maximum."""
+    df = spark.range(0, 400).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
+        F.when(F.col("id") % 50 == 0, F.lit(float("nan")))
+        .otherwise(F.col("id") / 100).alias("f"))
+    out = str(tmp_path / "enc")
+    pipeline.run_encode(spark, df, out, key="k", n_chunks=4)
+    got = pipeline.read_encoded(spark, out, where=("f", 3.995, None))
+    assert got.count() == df.filter(F.col("f") >= 3.995).count() == 8
+
+
+def _fake_store(tmp_path, rows, n_chunks=4):
+    """A sub-store skeleton for _scan_paths: manifest rows (chunk_id,
+    min_val, max_val) for column `c`, and n_chunks chunk_id=N dirs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    d = tmp_path / "s"
+    for c in range(n_chunks):
+        (d / "chunks" / f"chunk_id={c}").mkdir(parents=True)
+    (d / "chunks" / ".tmp-x.parquet").write_bytes(b"")  # hidden: ignored
+    (d / "manifest").mkdir()
+    ids, lo, hi = zip(*rows)
+    pq.write_table(pa.table({
+        "chunk_id": pa.array(ids, pa.int32()), "column": ["c"] * len(ids),
+        "min_val": pa.array(lo, pa.string()),
+        "max_val": pa.array(hi, pa.string())}),
+        str(d / "manifest" / "part-0.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("dtype,rows,lo,hi,kept", [
+    # int64 beyond 2^53 compares exactly; a float end compares as double
+    (T.LongType(), [(0, "1152921504606846976", "1152921504606846977"),
+                    (1, "1152921504606846978", "1152921504606846979")],
+     (1 << 60) + 2, None, {1, 2, 3}),
+    (T.LongType(), [(0, "0", "9"), (1, "10", "19"), (2, "0", "5")], 9.5,
+     None, {1, 3}),
+    # ends equal to a bound keep its chunk
+    (T.LongType(), [(0, "0", "9"), (1, "10", "19")], 9, 10, {0, 1, 2, 3}),
+    # one damaged bound: its end prunes nothing (chunk 1's max 5 < 12
+    # would prune it); NULL bounds keep a chunk
+    (T.LongType(), [(0, "0", "x"), (1, "0", "5")], 12, None, {0, 1, 2, 3}),
+    (T.LongType(), [(0, None, None), (1, "10", "19")], None, 5, {0, 2, 3}),
+    # any duplicate row proves exclusion; chunks 2, 3 have no rows
+    (T.LongType(), [(0, "0", "9"), (0, "0", "99"), (1, "0", "99")], 50, None,
+     {1, 2, 3}),
+    # NaN bounds never prove exclusion
+    (T.DoubleType(), [(0, "0.5", "nan"), (1, "0.5", "1.5")], 2.0, None,
+     {0, 2, 3}),
+    # an integral end past 2^24 meets a float column as float32: no prune
+    (T.FloatType(), [(0, "0.0", "1.0")], 1 << 25, None, {0, 1, 2, 3}),
+    (T.FloatType(), [(0, "0.0", "1.0")], 2, None, {1, 2, 3}),
+    # strings compare as UTF-8 bytes (U+FFFF sorts below U+1F600)
+    (T.StringType(), [(0, "a", "\uffff"), (1, "a", "\U0001f600")],
+     "\U0001f000", None, {1, 2, 3}),
+    # booleans have no exact comparison: nothing is pruned
+    (T.BooleanType(), [(0, "False", "False")], True, None, {0, 1, 2, 3}),
+])
+def test_scan_paths_rules(tmp_path, dtype, rows, lo, hi, kept):
+    import os
+    d = _fake_store(tmp_path, rows)
+    paths = pipeline._scan_paths(d, "c", dtype, lo, hi)
+    if paths == [f"{d}/chunks"]:
+        paths = [f"{d}/chunks/chunk_id={c}" for c in range(4)]
+    assert {int(os.path.basename(p).split("=")[1]) for p in paths} == kept
+
+
+def test_scan_paths_dates_and_timestamps(tmp_path):
+    """Date ends compare as days; timestamp bounds are naive UTC and a
+    naive end is local time, as PySpark's literal converter reads it."""
+    import datetime as dt
+    d = _fake_store(tmp_path, [(0, "2024-01-01", "2024-01-31"),
+                               (1, "2024-02-01", "2024-02-29")], 2)
+    paths = pipeline._scan_paths(d, "c", T.DateType(),
+                                 dt.date(2024, 2, 10), None)
+    assert paths == [f"{d}/chunks/chunk_id=1"]
+    d = _fake_store(tmp_path / "t", [
+        (0, "2024-01-01 00:00:00", "2024-01-01 00:59:59.999999"),
+        (1, "2024-01-01 01:00:00", "2024-01-01 01:59:59")], 2)
+    end = dt.datetime(2024, 1, 1, 1, tzinfo=dt.timezone.utc)
+    for e in (end, end.astimezone().replace(tzinfo=None)):
+        assert pipeline._scan_paths(d, "c", T.TimestampType(), e, None) \
+            == [f"{d}/chunks/chunk_id=1"]
+
+
+T0 = 1_704_067_200  # 2024-01-01 00:00:00 UTC
+
+
+@pytest.fixture(scope="module")
+def ts_store(spark, tmp_path_factory):
+    """Two sub-stores of (k, v, ts): v in [0, 3000) then [3000, 6000),
+    ts v minutes after T0."""
+    out = str(tmp_path_factory.mktemp("ts") / "enc")
+    _sub_stores(spark, [_kv(spark, lo, lo + 3000).withColumn(
+        "ts", F.timestamp_seconds(F.lit(T0) + F.col("v") * 60))
+        for lo in (0, 3000)], out, key="k", n_chunks=4)
+    return out
+
+
+def _predicted(spark, out, col, keep):
+    """(sub-store, chunk_id) pairs whose manifest bounds for `col` meet
+    the range, computed by Spark from min_val/max_val (`keep`)."""
+    return {(d, r.chunk_id) for d in (0, 1) for r in spark.read.parquet(
+        pipeline._manifest_path(f"{out}/batches/{d:010d}"))
+        .filter(F.col("column") == col).filter(keep).collect()}
+
+
+def _scanned(df):
+    """(sub-store, chunk_id) of every file the scan of `df` reads."""
+    import re
+    return {(int(m[1]), int(m[2])) for m in (
+        re.search(r"batches/(\d+)/chunks/chunk_id=(\d+)/", f)
+        for f in df.inputFiles())}
+
+
+def test_pruned_read_scans_surviving_files_only(spark, ts_store):
+    """Pruning is file-level: the scan's input files are exactly the
+    files of the chunks the zone maps keep, one per chunk."""
+    import glob
+    got = pipeline.read_encoded(spark, ts_store, where=("v", None, 2))
+    kept = _predicted(spark, ts_store, "v",
+                      F.col("min_val").cast("bigint") <= 2)
+    assert 1 <= len(kept) < 4  # part of sub-store 0, none of sub-store 1
+    want = {f for d, c in kept for f in glob.glob(
+        f"{ts_store}/batches/{d:010d}/chunks/chunk_id={c}/*.parquet")}
+    files = {f.removeprefix("file://") for f in got.inputFiles()}
+    assert files == want and len(want) == len(kept)
+    assert sorted(r.v for r in got.select("v").collect()) == [0, 1, 2]
+    # a range past every chunk scans nothing and returns no row
+    none = pipeline.read_encoded(spark, ts_store, where=("v", 6000, None))
+    assert none.inputFiles() == [] and none.count() == 0
+
+
+def test_pruned_read_runs_no_extra_job(spark, ts_store, count_jobs):
+    """The prune runs on the driver: a pruned count() starts as many
+    Spark jobs as an unfiltered one (no manifest scan, no broadcast)."""
+    n, pruned = count_jobs(lambda: pipeline.read_encoded(
+        spark, ts_store, where=("v", 4000, 4100)).count())
+    total, full = count_jobs(
+        lambda: pipeline.read_encoded(spark, ts_store).count())
+    assert (n, total) == (101, 6000)
+    assert pruned == full
+
+
+def test_pruned_timestamp_read_matches_manifest(spark, ts_store):
+    """On a timestamp column the kept (sub-store, chunk) set is the one
+    the manifest bounds predict when Spark compares them in the session
+    time zone, and the read returns exactly the rows in range."""
+    import datetime as dt
+    utc = dt.timezone.utc
+    lo = dt.datetime(2024, 1, 1, 0, 1, tzinfo=utc)  # v = 1
+    hi = dt.datetime(2024, 1, 1, 0, 3, 30, tzinfo=utc)  # v = 3.5
+    got = pipeline.read_encoded(spark, ts_store, columns=["v"],
+                                where=("ts", lo, hi))
+    kept = _predicted(spark, ts_store, "ts",
+                      (F.col("max_val").cast("timestamp") >= F.lit(lo))
+                      & (F.col("min_val").cast("timestamp") <= F.lit(hi)))
+    assert {d for d, _ in kept} == {0}
+    assert _scanned(got) == kept
+    assert sorted(r.v for r in got.collect()) == [1, 2, 3]
+
+
 def test_streaming_store_schema_mismatch_raises(spark, tmp_path):
     """A sub-store whose table_meta schema differs from the first one's
     must stop the read with a ValueError naming that sub-store."""
@@ -386,3 +564,6 @@ def test_chunk_file_outside_chunk_dir_fails(spark, tmp_path):
     shutil.copy(src, f"{out}/chunks/part-stray.parquet")
     with pytest.raises(Exception, match="outside chunk_id=N/"):
         pipeline.read_encoded(spark, out).count()
+    # a pruned read lists chunks/ on the driver and fails there
+    with pytest.raises(ValueError, match="outside chunk_id=N/"):
+        pipeline.read_encoded(spark, out, where=("v", 1000, None))
