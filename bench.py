@@ -111,6 +111,7 @@ def main() -> int:
         "extra": {
             "cpus": cpus,
             "encode_rows": n_rows,
+            "n_chunks": metrics["n_chunks"],
             "encode_raw_bytes": metrics["raw_bytes"],
             "encode_enc_bytes": metrics["enc_bytes"],
             "encode_gb_per_s": round(gbps, 4),

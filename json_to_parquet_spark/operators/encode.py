@@ -84,15 +84,6 @@ def arrow_schema_for(schema: T.StructType, tz: str | None = None) -> pa.Schema:
     return pa.schema(fields)
 
 
-CHUNK_ARROW = [
-    ("chunk_id", pa.int32()), ("column", pa.string()), ("codec", pa.string()),
-    ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
-    ("enc_bytes", pa.int64()), ("payload", pa.binary()),
-    ("meta", pa.string()), ("checksum", pa.string()),
-    ("wall_ms", pa.float64()),
-    ("min_val", pa.string()), ("max_val", pa.string()),
-]
-
 # manifest-only shape returned when the group fn writes the store itself
 MANIFEST_SCHEMA = T.StructType(
     [f for f in CHUNK_SCHEMA.fields if f.name != "payload"])
@@ -141,13 +132,13 @@ def _write_chunk_file(store_dir: str, chunk_id: int, table: pa.Table) -> None:
 
 def _encode_group_fn(columns: list[str], codecs: dict,
                      arrow_schema: pa.Schema, store_dir: str | None = None):
-    out_fields = CHUNK_ARROW
+    out_fields = arrow_schema_for(CHUNK_SCHEMA)
 
     def fn(table: pa.Table) -> pa.Table:
         # rows arrive in the chunk-local permutation, applied by the JVM
         # group sort (see encode_chunks)
         chunk_id = int(table.column(CHUNK_COL)[0].as_py())
-        cols: dict[str, list] = {name: [] for name, _ in out_fields}
+        cols: dict[str, list] = {f.name: [] for f in out_fields}
         for c in columns:
             t0 = time.perf_counter()
             arr = table.column(c).combine_chunks()
@@ -178,19 +169,15 @@ def _encode_group_fn(columns: list[str], codecs: dict,
             cols["wall_ms"].append((time.perf_counter() - t0) * 1000.0)
             cols["min_val"].append(vmin)
             cols["max_val"].append(vmax)
+        out = pa.table({f.name: pa.array(cols[f.name], type=f.type)
+                        for f in out_fields})
         if store_dir is None:
-            return pa.table(
-                {name: pa.array(cols[name], type=t) for name, t in out_fields})
+            return out
         # direct store write: persist the payload rows HERE (Arrow →
         # parquet, no JVM round-trip) and return manifest rows only —
         # the partition column chunk_id lives in the directory name
-        file_tbl = pa.table(
-            {name: pa.array(cols[name], type=t)
-             for name, t in out_fields if name != "chunk_id"})
-        _write_chunk_file(store_dir, chunk_id, file_tbl)
-        return pa.table(
-            {name: pa.array(cols[name], type=t) for name, t in out_fields
-             if name != "payload"})
+        _write_chunk_file(store_dir, chunk_id, out.drop_columns("chunk_id"))
+        return out.drop_columns("payload")
     return fn
 
 

@@ -22,17 +22,18 @@ within a chunk).
 
 Scale notes (the 100 TB design point):
   - chunk membership is a pure row function → no global coordination;
-    the only shuffle is the hash partition by chunk id, sized by
-    `target_chunk_bytes` so one chunk ≈ one comfortable Arrow group.
+    the only shuffle is the hash partition by chunk id, into whole waves
+    of chunks that fit `target_chunk_bytes` (see _whole_waves).
   - completed-chunk filtering is a broadcast anti-join against the
     manifest — never a collected id list: at 100 TB / 32 MB chunks there
     are ~3M chunk ids, and an `isin` literal list of that size is a
     driver-side plan bomb. Zone-map pruning is file-level, on the
     driver: pyarrow reads the manifest's bounds for one column and the
     scan gets the surviving chunk_id=N directories (see read_encoded).
-  - pass 1 samples a bounded NUMBER of rows (`sample_rows`, default 1M),
+  - pass 1 keeps a bounded NUMBER of rows (`sample_rows`, default 1M),
     not a fraction — codec choice needs distribution shape, and 25% of
-    10^12 docs would be a 25 TB "sample".
+    10^12 docs would be a 25 TB "sample". The bound is on the rows kept:
+    `Sample` sits above the scan, so every input byte is still parsed.
 """
 
 from __future__ import annotations
@@ -96,6 +97,20 @@ def _estimate_row_bytes(schema: T.StructType, stats: dict) -> float:
         else:
             total += _TYPE_WIDTHS.get(f.dataType.simpleString(), 8)
     return max(1.0, total)
+
+
+def _whole_waves(est_bytes: float, target_chunk_bytes: int, p: int) -> int:
+    """n_chunks for a fresh store: the smallest multiple of the cluster
+    parallelism `p` whose chunks fit the target. Perfect salts make encode
+    tasks even (one chunk each, see encode_chunks); whole waves fill cores."""
+    return p * max(1, math.ceil(est_bytes / (target_chunk_bytes * p)))
+
+
+# table_meta.json flags of stores this writer starts. single_row_group:
+# a chunk file is ONE write_table call, so no chunk straddles scan
+# partitions and read_encoded may take the shuffle-free decode.
+# nan_aware_max: a float chunk holding NaN stores max_val "nan".
+WRITER_FLAGS = {"single_row_group": True, "nan_aware_max": True}
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -192,10 +207,10 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
                store_is_shared: bool = False) -> dict:
     """Run (or resume) the encode pipeline. Returns run metrics.
 
-    Pass-1 sampling is capped by ROWS (`sample_rows`), not fraction —
-    stats need distribution shape, so the pass reads O(constant) rows at
-    any table size. `sample_fraction` overrides the derived fraction when
-    set explicitly.
+    Pass 1 keeps ~`sample_rows` ROWS at any table size, not a fraction
+    (its scan still parses every input byte); `sample_fraction`
+    overrides the derived fraction. Without `n_chunks` a fresh store gets
+    _whole_waves chunks; a resume keeps the meta's n_chunks.
 
     Chunk files are written by the encode workers themselves (see
     operators.encode.encode_chunks store_dir), so encoded payloads never
@@ -213,7 +228,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             "file I/O, which would create a local directory named after the "
             "scheme. Use a local or mounted path; stores behind a "
             "filesystem URI need the pyarrow.fs I/O seam (ROADMAP "
-            "direction 5).")
+            "direction 4).")
     if not ((spark.sparkContext.master or "").startswith("local")
             or store_is_shared):
         raise ValueError(
@@ -267,19 +282,11 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             est_rows = (int(rows_sampled / max(sample_fraction, 1e-9))
                         if sample_fraction < 1.0 else rows_sampled)
         if n_chunks is None:
-            est_bytes = est_rows * _estimate_row_bytes(src.schema, stats)
-            # floor at 4x the cluster parallelism: chunks land in shuffle
-            # partitions by hash, so with n_chunks ≈ cores balls-in-bins
-            # collisions serialize several chunks per core while others
-            # idle; ~4 chunks/task keeps all cores busy and statistically
-            # balanced (at 100 TB the bytes term dominates anyway)
-            n_chunks = max(1, 4 * spark.sparkContext.defaultParallelism,
-                           math.ceil(est_bytes / target_chunk_bytes))
+            n_chunks = _whole_waves(
+                est_rows * _estimate_row_bytes(src.schema, stats),
+                target_chunk_bytes, spark.sparkContext.defaultParallelism)
         # persist table meta (schema + full codec-decision manifest).
-        # single_row_group: the workers write each chunk file in ONE
-        # write_table call over ~n_columns rows, so no chunk can straddle
-        # scan partitions and read_encoded may take the shuffle-free
-        # decode. Written once: a resume never rewrites the meta.
+        # Written once: a resume never rewrites the meta.
         _write_meta(out_dir, {
             "schema": src.schema.json(), "key": key,
             "n_chunks": n_chunks, "codecs": codecs,
@@ -287,7 +294,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             "sort_order": sort_order,
             "stats": {c: {k: v for k, v in s.items() if k != "sample_blob"}
                       for c, s in stats.items()},
-            "single_row_group": True})
+            **WRITER_FLAGS})
 
     # --- resume: restrict to incomplete chunks via broadcast anti-join
     # (the done set can be millions of ids — never an isin literal list)
@@ -406,21 +413,25 @@ def _bound_literal(dtype: T.DataType, v) -> tuple | None:
     return None
 
 
-def _scan_paths(d: str, col: str, dtype: T.DataType, lo, hi) -> list[str]:
+def _scan_paths(d: str, col: str, dtype: T.DataType, lo, hi,
+                nan_aware_max: bool) -> list[str]:
     """What a range read of sub-store `d` scans: its chunks/ root, or,
     when the zone maps exclude a chunk, each chunk_id=N directory they do
     not exclude. One manifest row proves exclusion (a resume can leave
     duplicates); NULL bounds, an end whose bounds do not all parse and a
-    missing manifest prove nothing. No Spark job: pyarrow reads one
-    column's manifest rows, compared vectorized, and the driver lists
-    chunks/ — at 3M chunks, 3M short strings and one listing, the order
-    of work of the file index Spark builds for any read of the store."""
+    missing manifest prove nothing, nor do NaN-blind float maxima (no
+    `nan_aware_max`). No Spark job: pyarrow reads one column's manifest
+    rows, compared vectorized, and the driver lists chunks/ — at 3M
+    chunks, 3M short strings and one listing, the order of work of the
+    file index Spark builds for any read of the store."""
     root, mdir = _chunks_path(d), _manifest_path(d)
     if not os.path.isdir(mdir):
         return [root]
     bounds = pq.read_table(mdir, schema=_BOUNDS_SCHEMA,
                            filters=[("column", "==", col)])
     excl = pa.nulls(len(bounds), pa.bool_())  # Kleene: NULL keeps a chunk
+    if not nan_aware_max and isinstance(dtype, (T.DoubleType, T.FloatType)):
+        lo = None  # Spark orders NaN above every number
     for name, v, beyond in (("max_val", lo, pc.less),
                             ("min_val", hi, pc.greater)):
         end = _bound_literal(dtype, v)
@@ -476,8 +487,9 @@ def read_encoded(spark: SparkSession, out_dir: str,
     if where is not None:
         col, lo, hi = where
         dtype = dict((f.name, f.dataType) for f in schema.fields)[col]
-        paths = [p for d in stores
-                 for p in _scan_paths(d, col, dtype, lo, hi)]
+        paths = [p for d, m in zip(stores, metas)
+                 for p in _scan_paths(d, col, dtype, lo, hi,
+                                      m.get("nan_aware_max", False))]
         residual = F.lit(True)
         if lo is not None:
             residual = residual & (F.col(col) >= F.lit(lo))

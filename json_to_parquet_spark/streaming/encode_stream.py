@@ -44,7 +44,7 @@ _PINNED_META = ("schema", "key", "n_chunks", "codecs", "codec_plan",
 
 def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
                   checkpoint_dir: str, fmt: str = "parquet",
-                  n_chunks: int = 64, trigger_once: bool = True):
+                  n_chunks: int | None = None, trigger_once: bool = True):
     """Stream web pages from a directory into an encoded chunk store.
 
     Each micro-batch runs the batch pipeline into its own sub-store
@@ -52,17 +52,17 @@ def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
     the codec plan; every later batch reuses it: the plan fields of the
     oldest other sub-store's table_meta.json (schema, key, n_chunks,
     codecs, codec_plan, sort_order) are written into the batch's own
-    directory with `single_row_group` (the batch is written by the same
-    one-file-per-chunk writer), and run_encode(resume=True) takes them
-    instead of re-sampling. `n_chunks` therefore applies to the first batch only. A
-    replayed batch wipes its own directory first, so a half-written
-    attempt (stale meta, chunks or manifest) never survives. Returns the
+    directory with this writer's WRITER_FLAGS, and run_encode(resume=True)
+    takes them instead of re-sampling. `n_chunks` therefore sizes the
+    first batch only; None lets run_encode size it (whole waves, one chunk
+    per core for a small batch). A replayed batch wipes its own directory
+    first, so a half-written attempt never survives. Returns the
     StreamingQuery."""
     import os
     import shutil
 
-    from ..plans.pipeline import (_batch_dirs, _read_meta, _write_meta,
-                                  run_encode)
+    from ..plans.pipeline import (WRITER_FLAGS, _batch_dirs, _read_meta,
+                                  _write_meta, run_encode)
 
     reader = spark.readStream.format(fmt).schema(WEBPAGE_SCHEMA)
     stream = reader.load(src_dir)
@@ -78,7 +78,7 @@ def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
             meta = _read_meta(pinned[0])
             _write_meta(batch_dir, {
                 **{k: meta[k] for k in _PINNED_META if k in meta},
-                "single_row_group": True})
+                **WRITER_FLAGS})
         run_encode(batch_df.sparkSession, batch_df, batch_dir,
                    n_chunks=n_chunks, resume=True, sample_fraction=0.5)
 

@@ -25,20 +25,36 @@ def pages(spark):
     return synth_webpages(spark, 2000, seed=42).cache()
 
 
+def _in_job_group(sc, fn):
+    """(fn(), ids of the Spark jobs fn started), through a job group."""
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
 @pytest.fixture
 def count_jobs(spark):
-    """count_jobs(fn) → (fn(), number of Spark jobs fn started), counted
-    through a job group."""
-    sc = spark.sparkContext
-
+    """count_jobs(fn) → (fn(), number of Spark jobs fn started)."""
     def run(fn):
-        group = uuid.uuid4().hex
-        sc.setJobGroup(group, "counted")
-        try:
-            out = fn()
-        finally:
-            for prop in ("spark.jobGroup.id", "spark.job.description",
-                         "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(prop, None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        out, jobs = _in_job_group(spark.sparkContext, fn)
+        return out, len(jobs)
+    return run
+
+
+@pytest.fixture
+def stage_tasks(spark):
+    """stage_tasks(fn) → (fn(), numTasks of each stage of the jobs fn
+    started)."""
+    def run(fn):
+        out, jobs = _in_job_group(spark.sparkContext, fn)
+        st = spark.sparkContext.statusTracker()
+        stages = [st.getStageInfo(s) for j in jobs
+                  for s in st.getJobInfo(j).stageIds]
+        return out, [s.numTasks for s in stages if s is not None]
     return run

@@ -2,6 +2,7 @@
 encode pipeline is SIGKILLed mid-job; a resumed run must complete and the
 final chunk store must be bit-identical to an uninterrupted run."""
 
+import glob
 import json
 import os
 import signal
@@ -34,7 +35,13 @@ def test_sigkill_mid_encode_then_resume(spark, tmp_path):
         line = proc.stdout.readline()
         if "READY" in line:
             break
-    time.sleep(12)  # mid-encode for this size on 4 cores
+    # kill once the first chunk file has landed: the encode job is then
+    # running and its manifest write, the job's last step, is not done
+    # (a fixed sleep raced the ~12 s encode on 4 cores)
+    landed = os.path.join(out, "chunks", "chunk_id=*", "*.parquet")
+    while (time.time() < deadline and proc.poll() is None
+           and not glob.glob(landed)):
+        time.sleep(0.05)
     assert proc.poll() is None, "child finished before the kill"
     proc.kill()
     proc.wait(timeout=60)

@@ -122,6 +122,50 @@ def test_pipeline_resume_identical(spark, pages, tmp_path):
     assert pipeline.verify_encoded(spark, pages, out_a)["ok"]
 
 
+def test_whole_waves_sizing():
+    """n_chunks is the smallest multiple of the parallelism whose chunks
+    fit the byte target."""
+    t = 32 << 20
+    waves = pipeline._whole_waves
+    assert [waves(b, t, 4) for b in (0, 1000, 4 * t, 4 * t + 1, 5 * t,
+                                     8 * t, 8 * t + 1)] == \
+        [4, 4, 4, 8, 8, 8, 12]
+    assert [waves(b, t, 1) for b in (1, t, t + 1, 7 * t)] == [1, 1, 2, 7]
+
+
+def test_fresh_encode_one_chunk_per_core(spark, tmp_path, stage_tasks):
+    """A small fresh store without n_chunks gets one chunk per core: the
+    meta records defaultParallelism chunks, the grouped encode runs that
+    many tasks, and each writes one chunk_id=N file."""
+    import os
+    p = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 3000, numPartitions=1).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
+        (F.col("id") % 7).alias("v"))
+    out = str(tmp_path / "enc")
+    m, tasks = stage_tasks(lambda: pipeline.run_encode(
+        spark, df, out, key="k"))
+    assert m["n_chunks"] == pipeline._read_meta(out)["n_chunks"] == p
+    assert m["chunks_encoded"] == p and max(tasks) == p, tasks
+    chunks = pipeline._chunks_path(out)
+    assert sorted(os.listdir(chunks)) == sorted(f"chunk_id={c}"
+                                                for c in range(p))
+    assert all(len([f for f in os.listdir(f"{chunks}/chunk_id={c}")
+                    if f[0] not in "._"]) == 1 for c in range(p))
+    assert pipeline.verify_encoded(spark, df, out)["ok"]
+
+
+def test_resume_keeps_meta_n_chunks(spark, pages, tmp_path):
+    """A resume without n_chunks keeps the n_chunks table_meta.json pins,
+    whatever the sizing rule would pick for a fresh store."""
+    out = str(tmp_path / "enc")
+    pipeline.run_encode(spark, pages, out, n_chunks=16, max_chunks_this_run=2)
+    m = pipeline.run_encode(spark, pages, out)
+    assert m["n_chunks"] == pipeline._read_meta(out)["n_chunks"] == 16
+    assert m["chunks_skipped"] == 2 and m["chunks_encoded"] == 14
+    assert pipeline.verify_encoded(spark, pages, out)["ok"]
+
+
 def test_checksum_verify_mode(spark, pages, tmp_path):
     """Aggregate-checksum verify: no join, no table-data shuffle — and it
     must still detect a genuinely corrupted chunk in the store."""

@@ -159,7 +159,7 @@ def test_fresh_run_cleans_stale_layout(spark, tmp_path):
     assert m.select("chunk_id").distinct().count() == 3
 
 
-def test_resume_filter_scales_to_many_chunks(spark, tmp_path):
+def test_resume_filter_scales_to_many_chunks(spark, tmp_path, stage_tasks):
     """Resume filtering is a broadcast anti-join, not an isin literal
     list: with 50k completed chunks the plan must stay small, the encode
     shuffle must be sized by the chunks left to encode, and the run must
@@ -192,22 +192,11 @@ def test_resume_filter_scales_to_many_chunks(spark, tmp_path):
                    "codec_plan": {"k": {"codec": "plain"},
                                   "v": {"codec": "for"}},
                    "sort_order": ["k"]}, fh)
-    sc = spark.sparkContext
-    group = "resume-many-chunks"
-    sc.setJobGroup(group, "resume over a 50k-chunk manifest")
-    try:
-        m = pipeline.run_encode(spark, df, out, key="k", n_chunks=n_chunks)
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
+    m, tasks = stage_tasks(lambda: pipeline.run_encode(
+        spark, df, out, key="k", n_chunks=n_chunks))
     assert m["chunks_skipped"] == 50_000
     # the encode shuffle is sized by the 10k chunks left to encode, not
     # by n_chunks (one near-empty task per already-complete chunk)
-    st = sc.statusTracker()
-    stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup(group)
-              for s in st.getJobInfo(j).stageIds]
-    tasks = [s.numTasks for s in stages if s is not None]
     assert tasks and max(tasks) <= 10_000
     # only rows hashing OUTSIDE the 50k "done" chunks were encoded
     from json_to_parquet_spark.operators.chunking import with_chunk_id
@@ -384,6 +373,53 @@ def test_zone_map_keeps_nan_rows(spark, tmp_path):
     assert got.count() == df.filter(F.col("f") >= 3.995).count() == 8
 
 
+def test_zone_map_old_store_keeps_nan_rows(spark, tmp_path):
+    """A store without `nan_aware_max` may hold NaN-blind float maxima
+    (older encoders skipped NaN): there a float max prunes nothing, so the
+    NaN row survives a range above every finite value. A flagged store
+    still leaves its NaN-free chunks out of the scan."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from json_to_parquet_spark.operators.chunking import (CHUNK_COL,
+                                                          with_chunk_id)
+    df = spark.range(0, 400).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
+        F.when(F.col("id") == 0, F.lit(float("nan")))
+        .otherwise(F.col("id") / 100).alias("f"))
+    out = str(tmp_path / "enc")
+    pipeline.run_encode(spark, df, out, key="k", n_chunks=4)
+    where = ("f", 3.995, None)  # above every finite value
+    got = pipeline.read_encoded(spark, out, where=where)
+    assert got.count() == df.filter(F.col("f") >= 3.995).count() == 1
+    assert len(got.inputFiles()) == 1  # only the chunk holding the NaN
+    # make it an old store: no flag, and the NaN chunk's max is its
+    # largest finite value, as the NaN-blind encoder wrote it
+    meta = pipeline._read_meta(out)
+    del meta["nan_aware_max"]
+    pipeline._write_meta(out, meta)
+    blind = {r[0]: repr(r[1]) for r in with_chunk_id(df, "k", 4)
+             .filter(~F.isnan("f")).groupBy(CHUNK_COL).agg(F.max("f"))
+             .collect()}
+    mdir = pipeline._manifest_path(out)
+    m = pq.read_table(mdir)
+    nan_row = pc.and_(pc.equal(m["column"], "f"),
+                      pc.equal(m["max_val"], "nan"))
+    assert pc.sum(nan_row).as_py() == 1
+    old_max = [blind[c] if n else v for c, v, n in zip(
+        m["chunk_id"].to_pylist(), m["max_val"].to_pylist(),
+        nan_row.to_pylist())]
+    m = m.set_column(m.schema.get_field_index("max_val"), "max_val",
+                     pa.array(old_max, pa.string()))
+    shutil.rmtree(mdir)
+    (tmp_path / "enc" / "manifest").mkdir()
+    pq.write_table(m, f"{mdir}/part-0.parquet")
+    got = pipeline.read_encoded(spark, out, where=where)
+    assert got.count() == 1 and len(got.inputFiles()) == 4
+
+
 def _fake_store(tmp_path, rows, n_chunks=4):
     """A sub-store skeleton for _scan_paths: manifest rows (chunk_id,
     min_val, max_val) for column `c`, and n_chunks chunk_id=N dirs."""
@@ -434,7 +470,7 @@ def _fake_store(tmp_path, rows, n_chunks=4):
 def test_scan_paths_rules(tmp_path, dtype, rows, lo, hi, kept):
     import os
     d = _fake_store(tmp_path, rows)
-    paths = pipeline._scan_paths(d, "c", dtype, lo, hi)
+    paths = pipeline._scan_paths(d, "c", dtype, lo, hi, True)
     if paths == [f"{d}/chunks"]:
         paths = [f"{d}/chunks/chunk_id={c}" for c in range(4)]
     assert {int(os.path.basename(p).split("=")[1]) for p in paths} == kept
@@ -447,15 +483,15 @@ def test_scan_paths_dates_and_timestamps(tmp_path):
     d = _fake_store(tmp_path, [(0, "2024-01-01", "2024-01-31"),
                                (1, "2024-02-01", "2024-02-29")], 2)
     paths = pipeline._scan_paths(d, "c", T.DateType(),
-                                 dt.date(2024, 2, 10), None)
+                                 dt.date(2024, 2, 10), None, True)
     assert paths == [f"{d}/chunks/chunk_id=1"]
     d = _fake_store(tmp_path / "t", [
         (0, "2024-01-01 00:00:00", "2024-01-01 00:59:59.999999"),
         (1, "2024-01-01 01:00:00", "2024-01-01 01:59:59")], 2)
     end = dt.datetime(2024, 1, 1, 1, tzinfo=dt.timezone.utc)
     for e in (end, end.astimezone().replace(tzinfo=None)):
-        assert pipeline._scan_paths(d, "c", T.TimestampType(), e, None) \
-            == [f"{d}/chunks/chunk_id=1"]
+        assert pipeline._scan_paths(d, "c", T.TimestampType(), e, None,
+                                    True) == [f"{d}/chunks/chunk_id=1"]
 
 
 T0 = 1_704_067_200  # 2024-01-01 00:00:00 UTC
